@@ -142,31 +142,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // an explicit Int, validated up front: the raw env string is
-    // interpolated into both JSON lines as a bare number, so a
-    // non-numeric value (e.g. '*' for local[*]) would emit unparseable
-    // JSON at the very end of the run (ADVICE r18) — and local[*] would
-    // also untether the calibration pin, which is defined at a fixed
-    // worker count. Fail fast with the reason instead.
-    val cpusStr = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpus = cpusStr.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-      s"SPARK_GRAFT_CPUS must be a positive integer worker count, got " +
-        s"'$cpusStr' ('*'/local[*] is not benchable: the calibration pin " +
-        "is defined at an explicit cpu count)"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Hold every generated class for the whole 93-query run (default 100
-      // thrashes; see COLD/WARM CONTRACT above).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // DSV2 key-grouped reads (GameEventsSource) aggregate shuffle-free
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
+    val cpus = Session.workers
     // ERROR, not WARN: the driver parses a ~2000-char stdout tail, and WARN
     // chatter (e.g. unpersist-of-localCheckpoint) could push the JSON out.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(cpus, logLevel = "ERROR")
     // ARM the cross-session artifact store (round 17): the cold pass then
     // measures the production steady state for build-once index artifacts
     // (decontam bands/Bloom/paraphrase frames, PQ/IVFADC codebooks) —
@@ -179,25 +158,9 @@ object Bench {
       new java.io.File("graft_artifacts").getAbsolutePath)
     if (artifactsDir.nonEmpty)
       spark.conf.set(ArtifactStore.DirConfKey, artifactsDir)
-    // RELIABLE checkpointing for SHARED intermediates (round 17, the
-    // r14-r16 silent-failure root cause): releaseStaged() unpersists every
-    // block after each query for per-query isolation, but the dataset
-    // memos (staged shingles/band-buckets/quantized pts/IVFADC residual)
-    // legitimately hand their frames to LATER queries — under default
-    // localCheckpoint staging those reuses threw
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, and timeOnce's catch silently
-    // recorded the failure latency as the query's time
-    // (ann_ivf_trained/ivfadc/pq and the post-build dedup/decontam reuses
-    // were all affected — full list in BASELINE.md). With the SHARED
-    // checkpoint dir set, Materialize.stageShared writes reliable
-    // checkpoint FILES for exactly the memo-held frames; unpersist drops
-    // only in-memory blocks and reuse recomputes from the files.
-    // Query-INTERNAL staging (star rounds, BFS/SSSP frontiers) keeps the
-    // cheap localCheckpoint path — those blocks never outlive their query,
-    // and routing them to disk cost +0.8 s on graph_components alone.
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_bench_ckpt").toString
-    spark.conf.set(graft.Materialize.SharedDirConfKey, ckptDir)
+    // memo frames handed to later queries must survive each query's
+    // releaseStaged: a failed reuse would otherwise be timed as a query
+    Session.shareCheckpoints(spark)
     warmup(spark, sfDir)
     val headline = SparkEntry.benchQueries.map(_.name).toSet
     // A query that THROWS must be visible, not silently timed: the r16
@@ -219,7 +182,7 @@ object Bench {
             false
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      releaseStaged(spark)
+      Session.releaseStaged(spark)
       if (ok) Some(sec) else None
     }
     val qs = SparkEntry.all.sortBy(_.name)
@@ -334,16 +297,7 @@ object Bench {
     println(detail)
     println(compact) // keep LAST: the driver's tail window is ~2000 chars
     Console.out.flush()
-    spark.stop()
-    // the checkpoint files are session-scoped cache, not data — drop them
-    try {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(ckptDir))
-    } catch { case _: Throwable => () }
+    Session.stop(spark)
   }
 
   /** Exercise initialization shared across queries so the first query that
@@ -367,20 +321,8 @@ object Bench {
         get_json_object(col("props"), "$.k").as("k"),
         regexp_extract(col("event_type"), "(.*)", 1).as("re"))
       .count()
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     spark.sql(
       "SELECT graft_simhash(graft_shingle_hashes('warm up the native kernels'))")
       .count()
-  }
-
-  /** Drop blocks pinned by Materialize.stage/localCheckpoint during the query
-    * that just finished: each query must be self-contained, and at larger SF
-    * the accumulated pins would force storage eviction + GC churn that bleeds
-    * into later timings.
-    */
-  private def releaseStaged(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    spark.sharedState.cacheManager.clearCache()
   }
 }

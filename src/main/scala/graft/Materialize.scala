@@ -20,15 +20,23 @@ object Materialize {
 
   /** Effective shuffle parallelism for an EXPLICIT-COUNT repartition that
     * spreads a CPU-bound kernel (the §2.5 AQE-starved-stage fix): under
-    * AQE with `coalescePartitions.initialPartitionNum` set, that override
-    * — not `spark.sql.shuffle.partitions` — is the intended pre-coalesce
-    * parallelism; reading the base knob raw would understate it. One
-    * helper instead of three drifting `.toInt` call sites (ADVICE r19). */
-  def shuffleParallelism(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf
-      .getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-      .flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    * AQE partition coalescing with `coalescePartitions.initialPartitionNum`
+    * set, that override — not `spark.sql.shuffle.partitions` — is the
+    * intended pre-coalesce parallelism; reading the base knob raw would
+    * understate it. Spark reads the override only while AQE and its
+    * coalescing are both on, so with either off the base knob is the
+    * truth. One helper instead of three drifting `.toInt` call sites. */
+  def shuffleParallelism(spark: org.apache.spark.sql.SparkSession): Int = {
+    def on(key: String) = spark.conf.get(key).toBoolean
+    val initial =
+      if (on("spark.sql.adaptive.enabled") &&
+          on("spark.sql.adaptive.coalescePartitions.enabled"))
+        spark.conf
+          .getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+          .flatMap(_.toIntOption).filter(_ > 0)
+      else None
+    initial.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
 
   val DirConfKey = "spark.graft.checkpoint.dir"
 

@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // DSV2 key-grouped reads (GameEventsSource) aggregate shuffle-free
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // UNARMED by default (reversed from round 17 per ADVICE r18): Verify
     // is the CORRECTNESS gate, and with the store armed a populated
     // graft_artifacts/ would make the gate verify loaded parquet instead
@@ -75,6 +65,6 @@ object Verify {
     // completion marker: distinguishes a finished dump from stale output of
     // an earlier run when a later invocation dies before writing anything
     System.err.println(s"[verify] done: ${SparkEntry.queries.size} queries dumped")
-    spark.stop()
+    Session.stop(spark)
   }
 }

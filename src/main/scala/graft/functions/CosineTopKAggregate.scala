@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -135,15 +135,6 @@ case class CosineTopKAggregate(
 object CosineTopKAggregate {
   /** Register graft_cosine_topk(score, id, k) — k must be a literal int. */
   def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_topk",
-      es => {
-        val k = es(2) match {
-          case Literal(v: Int, IntegerType) if v > 0 => v
-          case other => throw new IllegalArgumentException(
-            s"graft_cosine_topk k must be a positive integer literal, got $other")
-        }
-        CosineTopKAggregate(es(0), es(1), k)
-      },
-      "built-in")
+    register(spark, "graft_cosine_topk",
+      es => CosineTopKAggregate(es(0), es(1), positiveK(es(2), "graft_cosine_topk")))
 }

@@ -74,6 +74,5 @@ case class FlameRayGenerator(bx: Expression, by: Expression)
 object FlameRayGenerator {
   /** Register alongside the scalar natives (idempotent). */
   def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_flame_rays", es => FlameRayGenerator(es(0), es(1)), "built-in")
+    register(spark, "graft_flame_rays", es => FlameRayGenerator(es(0), es(1)))
 }

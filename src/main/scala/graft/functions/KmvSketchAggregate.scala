@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -91,15 +91,6 @@ case class KmvSketchAggregate(
 object KmvSketchAggregate {
   /** Register graft_kmv(hash, k) — k must be a literal int. */
   def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv",
-      es => {
-        val k = es(1) match {
-          case Literal(v: Int, IntegerType) if v > 0 => v
-          case other => throw new IllegalArgumentException(
-            s"graft_kmv k must be a positive integer literal, got $other")
-        }
-        KmvSketchAggregate(es(0), k)
-      },
-      "built-in")
+    register(spark, "graft_kmv",
+      es => KmvSketchAggregate(es(0), positiveK(es(1), "graft_kmv")))
 }

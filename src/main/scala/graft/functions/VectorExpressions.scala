@@ -753,10 +753,7 @@ object VectorExpressions {
     * route; this one covers sessions we don't construct.
     */
   def ensureRegistered(spark: SparkSession): Unit =
-    registrations.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
+    registrations.foreach { case (name, builder) => register(spark, name, builder) }
 }
 
 /** Optimizer rule: rewrite the declarative HOF dot-product idiom

@@ -471,8 +471,7 @@ object RelationalOps {
     * oracle scale; the engine plan is the one that survives 100 TB).
     */
   /** The lineitem interval frame (key, id, s, e) consumed by
-    * `join_interval_overlap` AND by tools/ExplainOverlap — one definition
-    * so the profiling probe can never drift from the registered query. */
+    * `join_interval_overlap`. */
   private[graft] def lineitemIntervals(
       s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.lineitem(s, d).select(

@@ -55,10 +55,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * skew greater than the TTL margin can evict a live owner — size
   * `ttlMs` like a production lease (tens of seconds) against NTP-grade
   * skew; the spec uses tiny TTLs only to exercise the takeover path.
+  * `clock` (epoch ms) is a test seam: the spec advances a fake clock
+  * past a TTL instead of sleeping through it.
   */
 final class FsLease(root: String, name: String, ownerId: String,
                     ttlMs: Long,
-                    hadoopConf: org.apache.hadoop.conf.Configuration) {
+                    hadoopConf: org.apache.hadoop.conf.Configuration,
+                    clock: () => Long = () => System.currentTimeMillis()) {
 
   private val dir = new Path(root, name)
   private val lock = new Path(dir, "lock")
@@ -87,7 +90,7 @@ final class FsLease(root: String, name: String, ownerId: String,
       finally in.close()
     } catch { case scala.util.control.NonFatal(_) => Long.MinValue }
 
-  private def now(): Long = System.currentTimeMillis()
+  private def now(): Long = clock()
 
   private def writeAtomic(p: Path, txt: String, overwrite: Boolean): Boolean =
     try {

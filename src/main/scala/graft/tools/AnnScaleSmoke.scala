@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN scale smoke: the similarity family's recall story rests on
@@ -41,13 +40,7 @@ import org.apache.spark.sql.functions._
 object AnnScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_VECS", "1000000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorExpressions.ensureRegistered(spark)
+    val spark = graft.Session.local()
 
     val eps = 0.1 // planted perturbation: cos ~ 1/sqrt(1+eps^2) ~ 0.995
     // base(id) is a pure function of id, so the planted row id (≡9 mod 10)

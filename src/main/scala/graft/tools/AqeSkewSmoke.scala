@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{PartialReducerPartitionSpec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -46,21 +45,16 @@ object AqeSkewSmoke {
 
   def main(args: Array[String]): Unit = {
     val nLeft = sys.env.getOrElse("N_LEFT", "2000000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    val spark = graft.Session.local(conf = Map(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // smoke-scaled thresholds (defaults are 256MB/5x — correct at
       // production scale, unreachable in a laptop-sized smoke)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8MB")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8MB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4MB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) // force SMJ
 
     val dir = s"/tmp/aqe_skew_smoke_${java.util.UUID.randomUUID().toString.take(8)}"
     // left: hot key 7 carries 95% of rows, 64-byte pad; right: uniform

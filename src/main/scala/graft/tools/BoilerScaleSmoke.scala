@@ -52,12 +52,7 @@ object BoilerScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_DOCS", "100000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     // force the co-keyed fallback: the synthetic boiler set is ~N/4 spans
     spark.conf.set(CorpusOps.BoilerBroadcastMaxKey, "1000")
 

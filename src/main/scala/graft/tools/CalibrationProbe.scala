@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures graft.Bench's calibration workload on THIS machine:
   *
   *   sbt "runMain graft.tools.CalibrationProbe"
@@ -20,16 +18,10 @@ import org.apache.spark.sql.SparkSession
   */
 object CalibrationProbe {
   def main(args: Array[String]): Unit = {
-    // default matches the DRIVER's bench config (cpus=32), because the
-    // pin must be measured at the worker count the bench runs with
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the pin must be measured at the worker count the bench runs with
+    // (SPARK_GRAFT_CPUS=32 for the recorded Bench.CalibrationRefSec)
     val runs = args.headOption.map(_.toInt).getOrElse(7)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
     // one unmeasured warmup run (codegen compile)
     graft.Bench.calibrationProbeOnce(spark)
     val times = (1 to runs).map { i =>

@@ -69,13 +69,7 @@ object ClosureDepthSmoke {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
     graphsAt(spark, dir).foreach { case (name, edges) =>
       val depth = maxDistToRep(edges)
       println(s"[closure-depth] $name @ $dir: max node->rep distance $depth " +

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Connected-components scale smoke: run the large-star/small-star
@@ -49,12 +48,7 @@ import org.apache.spark.sql.functions._
 object ComponentsScaleSmoke {
   def main(args: Array[String]): Unit = {
     val targetEdges = sys.env.getOrElse("N_EDGES", "20000000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import graft.operators.DedupOps
 
     val hubSpokes = 200000L

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** END-TO-END composition smoke for the heavy families (judge r17,
@@ -62,13 +61,7 @@ object ComposedPipelineSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_DOCS", "2000000").toLong
     val ceiling = sys.env.getOrElse("WALL_CEILING_SEC", "900").toDouble
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorExpressions.ensureRegistered(spark)
+    val spark = graft.Session.local()
     import graft.operators.DedupOps
 
     // ---- corpus with both plants --------------------------------------

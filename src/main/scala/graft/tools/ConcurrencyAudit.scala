@@ -70,14 +70,7 @@ object ConcurrencyAudit {
   def main(args: Array[String]): Unit = {
     val dirA = args.headOption.getOrElse("/root/testdata/sf0.01")
     val dirB = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
 
     val dirs = Seq(dirA, dirB)
     val sequential: Result = dirs.flatMap(d =>

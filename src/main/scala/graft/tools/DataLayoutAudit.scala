@@ -49,14 +49,7 @@ object DataLayoutAudit {
 
   private def runAll(label: String, sfDir: String)
     : Map[String, Either[String, (String, Int)]] = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
     val out = graft.SparkEntry.all.map { q =>
       q.name -> (try Right(Canon.digestDf(q.run(spark, sfDir)))
       catch {
@@ -74,12 +67,8 @@ object DataLayoutAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val workDir = args.lift(1).getOrElse("/tmp/graft_layout/data")
 
-    val w = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    w.sparkContext.setLogLevel("ERROR")
+    // fixed geometry: the rewritten layout must not move with the host
+    val w = graft.Session.local(workers = 32, logLevel = "ERROR")
     TableNames.foreach(t => rewrite(w, sfDir, workDir, t))
     w.stop()
     SparkSession.clearActiveSession()

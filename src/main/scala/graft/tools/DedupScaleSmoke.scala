@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup scale smoke: run the full MinHash LSH pipeline (row-local
@@ -44,13 +43,7 @@ object DedupScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_DOCS", "200000").toLong
     val nb = sys.env.getOrElse("N_BOILER", "10000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorExpressions.ensureRegistered(spark)
+    val spark = graft.Session.local()
 
     // 80 words/doc from a 5000-word vocabulary; doc i≡99 (mod 100) copies
     // doc i-1's words at positions 1..79 (distinct word at position 0)

@@ -32,16 +32,10 @@ object DeterminismAudit {
   private def runAll(label: String, cores: Int, shufflePartitions: Int,
                      aqe: Boolean, maxPartitionBytes: String,
                      sfDir: String): Map[String, Either[String, (String, Int)]] = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cores, logLevel = "ERROR", conf = Map(
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.adaptive.enabled" -> aqe.toString,
+      "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes))
     val out = graft.SparkEntry.all.map { q =>
       q.name -> (try Right(Canon.digestDf(q.run(spark, sfDir)))
       catch {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `explain("formatted")` for the headline queries into
   * PLANS.md — the reviewable record of the physical plans the engine is
@@ -10,14 +9,8 @@ import org.apache.spark.sql.SparkSession
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // DSV2 key-grouped reads (GameEventsSource) aggregate shuffle-free
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed geometry: PLANS.md's partition counts are written against it
+    val spark = graft.Session.local(workers = 4, logLevel = "ERROR")
 
     val picks = Seq(
       "q1_agg" -> "scan→hash-agg pipeline: pushed shipdate filter, 6-column ReadSchema, partial+final HashAggregate",

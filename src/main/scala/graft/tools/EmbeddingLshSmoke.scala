@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Embedding-LSH recall smoke: measure the planted-pair recall of the
@@ -56,12 +55,7 @@ object EmbeddingLshSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_VECS", "20000").toInt
     val c = sys.env.getOrElse("TARGET_COS", "0.98").toDouble
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val (bands, r) =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only (r20, VERDICT item 3): measure the deletion-key bucket
@@ -16,12 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object FuzzySkewProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
     args.foreach { dir =>
       val names = graft.Tables.customer(spark, dir)
         .select(col("c_name").as("name")).distinct()

@@ -56,24 +56,10 @@ object HeadlineScaleSmoke {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dstDir = sys.env.getOrElse("SCALE_DIR",
       new java.io.File(s"scale_testbed/sf1").getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("headline-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // like graft.Bench: the documents/embeddings families (in scope since
-    // r20) memoize staged frames that later queries reuse after the
-    // per-query releaseStaged() — under plain localCheckpoint staging the
-    // reuse throws CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the r14-r16
-    // failure); the shared reliable-checkpoint dir makes reuse recompute
-    // from files instead
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_smoke_ckpt").toString
-    spark.conf.set(graft.Materialize.SharedDirConfKey, ckptDir)
+    val spark = graft.Session.local(logLevel = "ERROR")
+    // like graft.Bench: the documents/embeddings families memoize staged
+    // frames that later queries reuse after the per-query release
+    graft.Session.shareCheckpoints(spark)
 
     ensureTestbed(spark, srcDir, dstDir)
 
@@ -94,17 +80,12 @@ object HeadlineScaleSmoke {
       s"queries of ${SparkEntry.benchQueries.size} total headline " +
       "(excluded: the generator-backed lcg_* pair)")
 
-    def releaseStaged(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
-    }
     def pass(dir: String): Map[String, Double] =
       selected.map { q =>
         val t0 = System.nanoTime()
         q.run(spark, dir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        releaseStaged()
+        graft.Session.releaseStaged(spark)
         q.name -> sec
       }.toMap
 
@@ -154,7 +135,7 @@ object HeadlineScaleSmoke {
     println(f"[smoke] headline-scale PASS: ${rows.size} queries, total " +
       f"$totalS%.1f s → $totalB%.1f s (${totalB / totalS}%.2f× for ${Replicas}× rows), " +
       "0 super-linear")
-    spark.stop()
+    graft.Session.stop(spark)
   }
 
   /** Build the replicated testbed once; a `_READY` marker makes re-runs

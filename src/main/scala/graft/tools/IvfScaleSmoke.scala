@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** IVF scale smoke: the trained-quantizer ANN path at the scale
@@ -62,14 +61,7 @@ object IvfScaleSmoke {
     val k = 256
     val nClusters = 512
     val nQueries = 50
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorExpressions.ensureRegistered(spark)
-    graft.functions.CosineTopKAggregate.ensureRegistered(spark)
+    val spark = graft.Session.local()
     import graft.operators.KMeansOps
 
     val dir = java.nio.file.Files

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.{Locale, TimeZone}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: which Spark string functions read the JVM default
@@ -13,9 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object LocaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(workers = 2, logLevel = "ERROR")
     import spark.implicits._
 
     val pivots = Seq("TITLE", "I", "İstanbul", "straße I",

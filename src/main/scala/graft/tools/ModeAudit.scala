@@ -53,15 +53,7 @@ object ModeAudit {
 
   private def runAll(label: String, extraConf: Map[String, String],
                      sfDir: String): Map[String, Either[String, (String, Int)]] = {
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(conf = extraConf, logLevel = "ERROR")
     if (label == "R") println(s"[mode] ANSI default in this build: " +
       spark.conf.get("spark.sql.ansi.enabled"))
     val out = graft.SparkEntry.all.map { q =>
@@ -84,8 +76,7 @@ object ModeAudit {
 
     // flip ANSI away from whatever this build defaults to
     val ansiDefault = {
-      val s = SparkSession.builder().master("local[1]")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val s = graft.Session.local(workers = 1)
       val v = s.conf.get("spark.sql.ansi.enabled").toBoolean
       s.stop(); SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       v

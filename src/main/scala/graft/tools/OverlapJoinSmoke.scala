@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Interval-overlap scale smoke: run the bucketized interval×interval join
@@ -24,12 +23,7 @@ object OverlapJoinSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_INTERVALS", "2000000").toLong
     val keys = sys.env.getOrElse("N_KEYS", "20000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val B = graft.operators.RelationalOps.OverlapBucketDays
     val iv = spark.range(n).repartition(32)

@@ -212,13 +212,8 @@ object PipelineScaleSmoke {
     val nFull = sys.env.getOrElse("N_DOCS", "8400000").toLong
     require(nFull >= 2 * D,
       s"N_DOCS must be at least ${2 * D} (2×D) so the half tier is non-empty")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR",
+      conf = Map("spark.sql.shuffle.partitions" -> "32"))
     println(s"[pipescale] heap=${Runtime.getRuntime.maxMemory() / (1 << 20)} MiB")
     run(spark, D, "warmup(0.7M, copies=1)", passes = 1)
     run(spark, nFull / 2 / D * D, s"half(${nFull / 2 / D * D / 1e6}M)", passes = 2)

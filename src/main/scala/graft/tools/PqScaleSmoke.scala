@@ -67,14 +67,7 @@ object PqScaleSmoke {
     val subDims = 8
     val nClusters = 512
     val nQueries = 50
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorExpressions.ensureRegistered(spark)
-    graft.functions.CosineTopKAggregate.ensureRegistered(spark)
+    val spark = graft.Session.local()
     import graft.operators.{KMeansOps, PqOps}
 
     val dir = java.nio.file.Files

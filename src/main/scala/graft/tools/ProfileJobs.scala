@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only fixed-overhead profiler (not part of the driver contract): for
   * each named query (or the warm-time top-N with no args), count the Spark
@@ -16,19 +15,10 @@ import org.apache.spark.sql.SparkSession
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
     // like graft.Bench: memo frames handed to later queries must survive
     // the per-query unpersist (reliable checkpoint files, not blocks)
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_profile_ckpt").toString
-    spark.conf.set(graft.Materialize.SharedDirConfKey, ckptDir)
+    graft.Session.shareCheckpoints(spark)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
@@ -67,7 +57,7 @@ object ProfileJobs {
       val fn = graft.SparkEntry.queries(name)
       // one cold run to warm codegen/scan caches, then the measured run
       fn(spark, dir).count(): Unit
-      ProfileRelease.releaseStaged(spark)
+      graft.Session.releaseStaged(spark)
       Thread.sleep(50)
       jobs.set(0); stages.set(0); tasks.set(0)
       val c0 = cpuSec()
@@ -77,16 +67,8 @@ object ProfileJobs {
       val cpu = cpuSec() - c0
       Thread.sleep(100) // let listener events drain
       println(f"$name%-28s ${sec}%6.2f  ${cpu}%6.2f ${jobs.get()}%5d ${stages.get()}%6d ${tasks.get()}%6d")
-      ProfileRelease.releaseStaged(spark)
+      graft.Session.releaseStaged(spark)
     }
-    spark.stop()
-  }
-}
-
-private object ProfileRelease {
-  def releaseStaged(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    spark.sharedState.cacheManager.clearCache()
+    graft.Session.stop(spark)
   }
 }

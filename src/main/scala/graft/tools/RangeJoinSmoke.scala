@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Range-join scale smoke: run the bucketized point-in-interval join
@@ -23,12 +22,7 @@ object RangeJoinSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_EVENTS", "2000000").toLong
     val users = sys.env.getOrElse("N_USERS", "10000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val dayUs = 86400000000L
     val events = spark.range(n).repartition(32)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Relational-core scale smoke: the join/agg family is the engine's
@@ -66,10 +66,7 @@ object RelationalScaleSmoke {
     val targetFact = sys.env.getOrElse("N_FACT", "102000000").toLong
     require(targetFact % (2 * Period) == 0,
       s"N_FACT must be a multiple of ${2 * Period} so half and full runs both cover whole periods")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.local(conf = Map(
       // dim (1M × 2 longs ≈ 16 MB) must NOT broadcast: the shape under
       // test is the shuffle join a 100 TB deployment's real dimension
       // (too big for broadcast) forces. Both thresholds go to -1 —
@@ -77,17 +74,15 @@ object RelationalScaleSmoke {
       // shuffle (< 8 MB) at runtime, demotes the join to broadcast, and
       // the skew path silently never runs (observed on this machine).
       // The broadcast-star shape keeps its explicit broadcast() hint.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       // AQE skew-split thresholds scale with ABSOLUTE partition bytes;
       // production defaults (256 MB) are sized for production shuffles.
       // At this smoke's volume the hot key is ~150 MB compressed, so the
       // thresholds scale down proportionally — the MECHANISM (split the
       // hot partition, keep totals exact) is what is being proved.
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32MB")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32MB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16MB"))
     import spark.implicits._
 
     /** Exact expected totals from one integer pass over the period. */

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * structurally cannot see. This is the retry axis of the invariance set.
   *
   * Two fault points, exercised as two faulted passes against one clean
-  * reference run (master `local[32, 4]` — local mode with maxFailures=4;
+  * reference run (master `local[N, 4]` — local mode with maxFailures=4;
   * plain local[N] aborts the job on the first failure):
   *
   *  1. SCAN stages — [[graft.Tables.RetryFaultKey]] turns every table load
@@ -56,21 +56,16 @@ object RetryAudit {
     case other => other.children.exists(hasShuffleExchange)
   }
 
-  private def runAll(label: String, master: String, scanFault: Boolean,
+  private def runAll(label: String, maxFailures: Int, scanFault: Boolean,
                      postShuffleFault: Boolean, sfDir: String)
       : (Map[String, Either[String, (String, Int)]], Int) = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.local(logLevel = "ERROR", conf = Map(
+      "spark.master" -> s"local[${graft.Session.workers}, $maxFailures]",
       // many tiny scan tasks ⇒ many injected failures per stage, and the
       // per-TASK failure count stays 1 « maxFailures
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config(graft.Tables.RetryFaultKey, scanFault.toString)
-      .config(graft.Tables.RetryFaultPostShuffleKey, postShuffleFault.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.files.maxPartitionBytes" -> "1m",
+      graft.Tables.RetryFaultKey -> scanFault.toString,
+      graft.Tables.RetryFaultPostShuffleKey -> postShuffleFault.toString))
     var postShuffleFaulted = 0
     val out = graft.SparkEntry.all.map { q =>
       q.name -> (try {
@@ -104,14 +99,14 @@ object RetryAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // reference first: a clean single-attempt run on the same split size
-    val (ref, _) = runAll("reference (no faults)", "local[32]",
+    val (ref, _) = runAll("reference (no faults)", 1,
       scanFault = false, postShuffleFault = false, sfDir = sfDir)
     val (scanned, _) = runAll("faulted (every scan task fails attempt 0)",
-      "local[32, 4]", scanFault = true, postShuffleFault = false,
+      4, scanFault = true, postShuffleFault = false,
       sfDir = sfDir)
     val (merged, nPost) = runAll(
       "faulted (result + staged-checkpoint stages fail attempt 0)",
-      "local[32, 4]", scanFault = false, postShuffleFault = true,
+      4, scanFault = false, postShuffleFault = true,
       sfDir = sfDir)
     val names = ref.keySet.toSeq.sorted
     def diff(tag: String, got: Map[String, Either[String, (String, Int)]]) =

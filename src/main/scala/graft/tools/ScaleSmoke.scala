@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.game.{GameEvent, GameFold}
 
@@ -13,12 +12,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val rooms = args.headOption.map(_.toInt).getOrElse(64)
     val perRoom = args.lift(1).map(_.toLong).getOrElse(160000L) // ~10M total
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val events = spark.read.format("graft.sources.GameEventsProvider")

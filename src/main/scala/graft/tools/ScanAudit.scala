@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dev audit: execute every registered query at smoke scale and count how
@@ -18,13 +17,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.debug.maxToStringFields", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR",
+      conf = Map("spark.sql.debug.maxToStringFields" -> "200"))
 
     val tablePat = "([a-z_]+)\\.parquet".r
     var flagged = 0

@@ -692,13 +692,8 @@ object SelfcheckHostile {
 
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/tmp/graft_hostile/data")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed geometry: the written testbed must not move with the host
+    val spark = graft.Session.local(workers = 4, logLevel = "ERROR")
     writeDataset(spark, dataDir)
     realDecoderPass(spark)
     println(s"[hostile] dataset written to $dataDir " +

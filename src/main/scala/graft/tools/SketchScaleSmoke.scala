@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sketch + graph scale smoke: run the KMV distinct estimator, the
@@ -25,13 +24,7 @@ import org.apache.spark.sql.functions._
 object SketchScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_ROWS", "4000000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.KmvSketchAggregate.ensureRegistered(spark)
+    val spark = graft.Session.local()
 
     // ---- KMV at high cardinality ------------------------------------
     // 4 groups; key space ~n/8 per group so each group sees ~500k

@@ -46,13 +46,7 @@ object SqlParityProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR")
     Tables.registerViews(spark, dir)
     val byName = SparkEntry.all.map(q => q.name -> q).toMap
     val results = SparkEntry.oracleSql.toSeq.sortBy(_._1).map { case (name, sql) =>

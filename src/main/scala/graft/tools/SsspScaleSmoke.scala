@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Weighted-SSSP scale smoke: run [[graft.operators.GraphOps
@@ -34,12 +33,7 @@ object SsspScaleSmoke {
   def main(args: Array[String]): Unit = {
     val fillerEdges = sys.env.getOrElse("N_EDGES", "2000000").toLong
     val hubSpokes = 100000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import graft.operators.GraphOps
 
     val rounds = GraphOps.SsspMaxRounds.toLong

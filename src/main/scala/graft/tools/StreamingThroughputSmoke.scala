@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -46,13 +45,7 @@ object StreamingThroughputSmoke {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_EVENTS", "5000000").toLong
     val files = sys.env.getOrElse("N_FILES", "50").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import graft.streaming.EventStream
 
     val dir = java.nio.file.Files

@@ -75,12 +75,7 @@ object SubstringScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("N_DOCS", "100000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def timed(nDocs: Long): (Array[(Long, Long, Long)], Double) = {
       val t0 = System.nanoTime()

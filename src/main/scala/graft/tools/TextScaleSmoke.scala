@@ -211,13 +211,8 @@ object TextScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val nFull = sys.env.getOrElse("N_DOCS", "20100000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(logLevel = "ERROR",
+      conf = Map("spark.sql.shuffle.partitions" -> "32"))
     println(s"[textscale] heap=${Runtime.getRuntime.maxMemory() / (1 << 20)} MiB")
     val nHalf = nFull / 2 / P * P
     run(spark, 600000L, "warmup(0.6M)", passes = 1)

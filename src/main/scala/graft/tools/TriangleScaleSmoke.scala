@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Triangle-counting scale smoke: run [[graft.operators.GraphOps
@@ -29,12 +28,7 @@ import org.apache.spark.sql.functions._
 object TriangleScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nTris = sys.env.getOrElse("N_TRIS", "300000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def run(t: Long): (Long, Long, Long, Double) = {
       // triangles on node triples (3i, 3i+1, 3i+2), i < t

@@ -60,12 +60,7 @@ object WindowScaleSmoke {
     require(targetN % 9800 == 0,
       "N_EVENTS must be a multiple of 9800 (half and full volumes both " +
         "need 100 | N for whole users and 49 | 4N/5 for whole skew cycles)")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     // ---- closed forms (driver integer loops over one user's sequence) --
     val S = EventsPerUser

@@ -16,8 +16,18 @@ class LeaseSpec extends SparkSuite {
     java.nio.file.Files.createTempDirectory("graft_lease_spec").toString
 
   private def lease(root: String, name: String, owner: String,
-                    ttlMs: Long = 60000L): FsLease =
-    new FsLease(root, name, owner, ttlMs, spark.sessionState.newHadoopConf())
+                    ttlMs: Long = 60000L,
+                    clock: () => Long = () => System.currentTimeMillis()): FsLease =
+    new FsLease(root, name, owner, ttlMs, spark.sessionState.newHadoopConf(),
+      clock)
+
+  /** A clock the test advances by hand: TTL expiry is then a step of the
+    * test, not a race between a sleep and a loaded box. */
+  private final class FakeClock extends (() => Long) {
+    private val ms = new java.util.concurrent.atomic.AtomicLong(1000000L)
+    def apply(): Long = ms.get()
+    def advance(by: Long): Unit = ms.addAndGet(by): Unit
+  }
 
   /** Run one thunk per claimant on its own thread, all released together
     * (latch), collecting each claimant's outcome — a genuine concurrent
@@ -79,11 +89,12 @@ class LeaseSpec extends SparkSuite {
       epochs += e.get
       l.release(e.get)
     }
-    val crash = lease(root, "role-seq", "crasher", ttlMs = 1L)
+    val clock = new FakeClock
+    val crash = lease(root, "role-seq", "crasher", ttlMs = 1L, clock = clock)
     val ce = crash.tryAcquire()
     assert(ce.isDefined); epochs += ce.get
-    Thread.sleep(10)
-    val successor = lease(root, "role-seq", "successor")
+    clock.advance(10)
+    val successor = lease(root, "role-seq", "successor", clock = clock)
     val se = successor.tryAcquire()
     assert(se.isDefined); epochs += se.get
     assert(epochs.toSeq === epochs.sorted.distinct.toSeq,
@@ -93,11 +104,12 @@ class LeaseSpec extends SparkSuite {
 
   test("expired lease: challengers take over with a single winner and a higher epoch") {
     val root = freshRoot()
-    val dead = lease(root, "role-r", "crashed", ttlMs = 1L)
+    val clock = new FakeClock
+    val dead = lease(root, "role-r", "crashed", ttlMs = 1L, clock = clock)
     assert(dead.tryAcquire() === Some(1L))
-    Thread.sleep(10) // let the 1 ms lease lapse
+    clock.advance(10) // let the 1 ms lease lapse
     val challengers =
-      race(6)(i => lease(root, "role-r", s"c-$i").tryAcquire())
+      race(6)(i => lease(root, "role-r", s"c-$i", clock = clock).tryAcquire())
     assert(challengers.count(_.isDefined) === 1,
       s"exactly one challenger may take over: $challengers")
     // crash takeover FENCES: epoch strictly increases, so a fencing
@@ -109,24 +121,20 @@ class LeaseSpec extends SparkSuite {
 
   test("renewal extends the lease; a fenced-out epoch cannot renew or act") {
     val root = freshRoot()
-    // TTL sized for a LOADED box: the renew cadence (150 ms) must fit
-    // inside the TTL (900 ms) even when a full-suite run stalls this
-    // thread for several hundred ms between sleep and renew — at the
-    // original 150 ms TTL / 60 ms cadence a ~90 ms GC pause was enough
-    // to lapse a live owner mid-loop (flaked once under `sbt test`)
-    val a = lease(root, "role-s", "a", ttlMs = 900L)
+    val clock = new FakeClock
+    val a = lease(root, "role-s", "a", ttlMs = 900L, clock = clock)
     assert(a.tryAcquire() === Some(1L))
     // renewals keep a short lease alive well PAST its original TTL: the
-    // loop spans ~1.2 s of a 0.9 s lease, so if renew() did nothing the
+    // loop spans 1.2 s of a 0.9 s lease, so if renew() did nothing the
     // later isOwner checks would fail
     (0 until 8).foreach { _ =>
-      Thread.sleep(150)
+      clock.advance(150)
       assert(a.renew(1L), "owner renewal must succeed while held")
       assert(a.isOwner(1L))
     }
     // let it lapse, lose it to b, then the zombie's fencing checks fail
-    Thread.sleep(1800)
-    val b = lease(root, "role-s", "b", ttlMs = 60000L)
+    clock.advance(1800)
+    val b = lease(root, "role-s", "b", ttlMs = 60000L, clock = clock)
     assert(b.tryAcquire() === Some(2L))
     assert(!a.isOwner(1L), "zombie must observe fencing before writing")
     assert(!a.renew(1L), "zombie renewal must be rejected")

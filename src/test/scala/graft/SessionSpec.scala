@@ -1,0 +1,88 @@
+package graft
+
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+/** The one session recipe: its function install replaces nothing, its
+  * shared checkpoint dir keeps memo frames alive across [[Session.releaseStaged]],
+  * and no other main builds a session of its own.
+  */
+class SessionSpec extends SparkSuite {
+
+  test("repeated set-up and ensureRegistered keep the installed builders") {
+    val registry = spark.sessionState.functionRegistry
+    // a non-capturing builder lambda is one JVM object per call site, so
+    // re-registering it would keep the builder; the ExpressionInfo that
+    // create-or-replace builds on every call is what shows a replacement
+    def entries() = Seq("graft_dot", "graft_topk", "graft_cosine_topk",
+      "graft_qsketch", "graft_kmv", "graft_flame_rays").map { n =>
+      val id = FunctionIdentifier(n)
+      (n, registry.lookupFunctionBuilder(id), registry.lookupFunction(id))
+    }
+    val installed = entries()
+    assert(installed.forall(e => e._2.isDefined && e._3.isDefined),
+      s"not all installed: ${installed.map(_._1)}")
+    assert(Session.local(workers = SparkSuite.Workers) eq spark)
+    assert(Session.local(workers = SparkSuite.Workers) eq spark)
+    functions.VectorExpressions.ensureRegistered(spark)
+    functions.TopKAggregate.ensureRegistered(spark)
+    entries().zip(installed).foreach { case ((n, builder, info), before) =>
+      assert(builder.get eq before._2.get, s"$n: builder replaced")
+      assert(info.get eq before._3.get, s"$n: registration replaced")
+    }
+  }
+
+  test("a memo-backed query survives releaseStaged under the shared checkpoint dir") {
+    // its own JVM: releaseStaged drops EVERY pinned block of the
+    // SparkContext, and in this shared test session that includes the
+    // localCheckpoint frames other suites' dataset memos still hand out
+    val jvm = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++ jvm ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.ReleaseStagedProbe", smokeDir)
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8")
+      .getLines().toList
+    assert(p.waitFor() === 0, out.takeRight(20).mkString("\n"))
+    val digests = out.filter(_.startsWith("DIGEST "))
+    assert(digests.size === 2, out.takeRight(20).mkString("\n"))
+    assert(digests.head === digests.last)
+    assert(!digests.head.endsWith(" 0"), "kmeans_centroids returned no rows")
+  }
+
+  test("no main outside Session builds its own SparkSession") {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val builders =
+      try walk.filter(_.toString.endsWith(".scala")).toArray.toSeq
+        .map(_.asInstanceOf[Path])
+        .filter(p => Files.readString(p).contains("SparkSession.builder"))
+        .map(p => root.relativize(p).toString)
+      finally walk.close()
+    assert(builders === Seq("graft/Session.scala"))
+  }
+}
+
+/** Child-JVM half of SessionSpec's memo case: run kmeans_centroids (its
+  * staged quantized frame is memo-held), release every pinned block, run
+  * it again from the memo, and print both digests. */
+object ReleaseStagedProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = Session.local(workers = SparkSuite.Workers)
+    Session.shareCheckpoints(spark)
+    val q = SparkEntry.all.find(_.name == "kmeans_centroids").get
+    def digest(): Unit = {
+      val (d, rows) = tools.Canon.digestDf(q.run(spark, args(0)))
+      println(s"DIGEST $d $rows")
+    }
+    digest()
+    Session.releaseStaged(spark)
+    digest()
+    Session.stop(spark)
+  }
+}

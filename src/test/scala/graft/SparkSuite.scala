@@ -5,20 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM per `sbt test` fork). */
 object SparkSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // engine-level conf, mirrored in Verify/Bench: DSV2 key-grouped
-      // reads (GameEventsSource) aggregate shuffle-free
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Fixed, not SPARK_GRAFT_CPUS: plan-shape and partition-count
+    * assertions are written against four workers. */
+  val Workers = 4
+  lazy val spark: SparkSession = Session.local(workers = Workers)
   val smokeDir = "/root/testdata/sf0.001"
 }
 
