@@ -269,15 +269,15 @@ object ArtifactStore {
     }
 
   /** A DataFrame artifact: saved as-is, loaded as a parquet scan that is
-    * immediately RE-STAGED through [[Materialize.stage]]. The re-stage
+    * immediately RE-STAGED through [[Materialize.stageShared]]. The re-stage
     * matters: memo consumers treat these handles as materialized
     * in-memory frames and some walk them once per iteration (the star
     * loop, multi-band joins) — a bare parquet scan re-pays file listing
     * + footer + decode on every job, measured at 10-35× on the warm
     * dedup family when the load path first shipped without it. One
     * localCheckpoint (or reliable checkpoint, per the session's
-    * [[Materialize.DirConfKey]]) restores the staged-handle contract the
-    * builder would have produced. */
+    * [[Materialize.SharedDirConfKey]]) restores the staged-handle contract
+    * the builder would have produced. */
   def frame(name: String): Persistence[DataFrame] = Persistence(
     name,
     save = (_, path, df) => df.write.mode("overwrite").parquet(path),

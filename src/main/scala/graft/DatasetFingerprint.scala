@@ -9,7 +9,7 @@ package graft
   * Known tradeoff (accepted): a rewrite that preserves every file name AND
   * length within the filesystem's mtime resolution is invisible — a content
   * checksum would close that but costs a data read; metadata-only is the
-  * right price for a per-query guard. Consumers evict superseded
+  * right price for a per-query guard. [[DatasetMemo]] evicts superseded
   * fingerprints for the same (app, dir) on insert so stale artifacts don't
   * accumulate over a long-lived application.
   */

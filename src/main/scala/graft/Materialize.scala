@@ -4,16 +4,17 @@ import org.apache.spark.sql.Dataset
 
 /** One policy for staging intermediates that multiple consumers walk
   * (signature corpora, pair sets, iterative labels) instead of bare
-  * localCheckpoint calls at every site:
+  * checkpoint calls at every site. Two tiers:
   *
-  *  - default: `localCheckpoint()` — executor-storage-pinned, right for
-  *    single-node and sf-scale runs;
-  *  - `spark.graft.checkpoint.dir` set: reliable `checkpoint()` into that
-  *    directory — the 100 TB posture, where executor loss must not trigger
-  *    a recompute storm and storage eviction must not fail the job.
+  *  - [[stage]] / [[stageLazy]]: `localCheckpoint()` — executor-storage
+  *    pinned, for intermediates that live and die inside one query;
+  *  - [[stageShared]]: intermediates that OUTLIVE the building query
+  *    (dataset-memo artifacts). With [[SharedDirConfKey]] set they become
+  *    reliable checkpoint files that survive a session-wide unpersist;
+  *    unset, they stage like [[stage]].
   *
-  * The plan shape is identical either way; only the materialization medium
-  * changes, which is exactly why it belongs behind one switch rather than
+  * The plan shape is identical in both tiers; only the materialization
+  * medium changes, which is why it sits behind one switch rather than
   * per-call-site caveats.
   */
 object Materialize {
@@ -38,38 +39,27 @@ object Materialize {
     initial.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
   }
 
-  val DirConfKey = "spark.graft.checkpoint.dir"
-
-  /** Reliable-checkpoint dir for SHARED intermediates only (the
-    * dataset-memo artifacts that outlive the query that built them).
-    * A session that isolates queries by unpersisting all blocks between
-    * them (graft.Bench's releaseStaged) sets ONLY this key: memo frames
-    * then survive the release — recompute reads the checkpoint files —
-    * while query-internal iteration frames (star rounds, BFS/SSSP
-    * frontiers) keep the cheap localCheckpoint path instead of paying a
-    * disk write per loop round (measured +0.8 s on graph_components
-    * alone when the blanket [[DirConfKey]] was used for this). The full
-    * 100 TB posture still sets [[DirConfKey]], which covers both. */
+  /** Reliable-checkpoint dir for SHARED intermediates (the dataset-memo
+    * artifacts that outlive the query that built them). A session that
+    * isolates queries by unpersisting all blocks between them
+    * ([[Session.releaseStaged]]) sets this key: memo frames then survive
+    * the release — recompute reads the checkpoint files — while
+    * query-internal iteration frames (star rounds, BFS/SSSP frontiers)
+    * keep the cheap localCheckpoint path instead of paying a disk write
+    * per loop round. */
   val SharedDirConfKey = "spark.graft.checkpoint.sharedDir"
 
   /** Stage an intermediate that OUTLIVES the building query — a
-    * dataset-memo artifact handed to later queries. Honors
-    * [[SharedDirConfKey]], then [[DirConfKey]], else localCheckpoint. */
-  def stageShared[T](df: Dataset[T]): Dataset[T] = {
-    val spark = df.sparkSession
-    spark.conf.getOption(SharedDirConfKey).filter(_.nonEmpty) match {
+    * dataset-memo artifact handed to later queries: a reliable checkpoint
+    * under [[SharedDirConfKey]] when set, else [[stage]]. */
+  def stageShared[T](df: Dataset[T]): Dataset[T] =
+    df.sparkSession.conf.getOption(SharedDirConfKey).filter(_.nonEmpty) match {
       case Some(dir) => reliably(df, dir)
       case None      => stage(df)
     }
-  }
 
-  def stage[T](df: Dataset[T]): Dataset[T] = {
-    val spark = df.sparkSession
-    spark.conf.getOption(DirConfKey) match {
-      case Some(dir) => reliably(df, dir)
-      case None      => withRetryBarrier(df).localCheckpoint()
-    }
-  }
+  def stage[T](df: Dataset[T]): Dataset[T] =
+    withRetryBarrier(df).localCheckpoint()
 
   /** [[stage]] for a frame that a LATER action in the SAME query is
     * guaranteed to consume (an iterative round followed by its digest,
@@ -79,17 +69,9 @@ object Materialize {
     * scheduled job per staged frame (AQE still materializes the frame's
     * internal exchange stages at call time; only the last stage defers).
     * Partial consumption is safe: LocalRDDCheckpointData completes any
-    * missing partitions at first-job end. Under [[DirConfKey]] (the
-    * reliable-checkpoint 100 TB posture) this stays EAGER — a lazy
-    * reliable checkpoint recomputes the frame a second time to write the
-    * checkpoint files, which is strictly worse. */
-  def stageLazy[T](df: Dataset[T]): Dataset[T] = {
-    val spark = df.sparkSession
-    spark.conf.getOption(DirConfKey) match {
-      case Some(dir) => reliably(df, dir)
-      case None      => withRetryBarrier(df).localCheckpoint(eager = false)
-    }
-  }
+    * missing partitions at first-job end. */
+  def stageLazy[T](df: Dataset[T]): Dataset[T] =
+    withRetryBarrier(df).localCheckpoint(eager = false)
 
   /** Audit-only fault point (graft.tools.RetryAudit): staged intermediates
     * are computed by their own checkpoint job, so a barrier here makes that

@@ -169,12 +169,12 @@ object DedupOps {
     * [[graft.DatasetMemo]] (build outside the lock — a cold build is a
     * Spark job and must not serialize unrelated queries).
     *
-    * Known tradeoff (accepted): under the default localCheckpoint staging,
-    * losing an executor loses checkpoint blocks and the memoized handle
-    * stays broken for the application's lifetime — irrelevant in the
-    * single-JVM local posture, and the 100 TB posture sets
-    * `spark.graft.checkpoint.dir` (reliable storage) where executor loss
-    * does not invalidate the artifact.
+    * Known tradeoff (accepted): without [[graft.Materialize.SharedDirConfKey]]
+    * the frame is a localCheckpoint, and losing an executor loses its
+    * blocks and leaves the memoized handle broken for the application's
+    * lifetime — irrelevant in a single-JVM local session. With the key
+    * set, `stageShared` writes reliable checkpoint files, which executor
+    * loss does not invalidate.
     */
   private val cappedShingleFrames = new graft.DatasetMemo[DataFrame](
     Some(graft.ArtifactStore.frame("capped_shingles")))
@@ -338,9 +338,7 @@ object DedupOps {
     minhashPairsStaged(graft.Materialize.stageLazy(hashedShinglesOf(docs)))
 
   /** The banding + verification pipeline over a pre-STAGED hashed-shingle
-    * corpus (one materialization feeds signatures AND verification —
-    * Materialize.stage picks localCheckpoint or a reliable checkpoint dir
-    * via spark.graft.checkpoint.dir, the 100 TB posture).
+    * corpus (one materialization feeds signatures AND verification).
     */
   private def minhashPairsStaged(tks: DataFrame): DataFrame = {
     // hot (band, sig) buckets dropped before the self-join — see
@@ -714,7 +712,7 @@ object DedupOps {
 
   /** Memoized packed Bloom words per (applicationId, dataset dir, dataset
     * fingerprint) — the decontamination filter is an INDEX ARTIFACT of the
-    * benchmark set, like the IVF coarse quantizer ([[KMeansOps]].models):
+    * benchmark set, like the IVF coarse quantizer ([[KMeansOps.lloyd]]):
     * built once per dataset, reused by every subsequent execution. Without
     * this the query paid a one-shuffle build job + a 2^15-long collect on
     * EVERY run — an index-build cost billed per query (the round-10 bench's

@@ -108,9 +108,7 @@ object FoldOps {
     "replay_alive_status",
     (s, d) => {
       import org.apache.spark.sql.functions._
-      // one materialized derivation feeds both DAG branches (fold + cohort);
-      // Materialize.stage picks localCheckpoint or a reliable checkpoint
-      // dir from spark.graft.checkpoint.dir (the 100 TB posture)
+      // one materialized derivation feeds both DAG branches (fold + cohort)
       val log = graft.Materialize.stageLazy(GameLog.derive(s, d))
       val states = GameFold.playerStates(log).toDF()
       val creators = log.toDF()

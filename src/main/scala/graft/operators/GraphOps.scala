@@ -96,11 +96,9 @@ object GraphOps {
     * map-side-combinable sum onto destinations; nodes with no in-edges
     * keep the damping base via the left join. The edge frame (with
     * outdegree attached) is materialized ONCE inside [[ranks]]
-    * (Materialize.stageLazy: localCheckpoint locally, a reliable
-    * checkpoint dir under spark.graft.checkpoint.dir — the 100 TB
-    * posture): without it every iteration re-derives the first-touch
-    * aggregate and chain window, tripling the shuffle count of the
-    * unrolled plan.
+    * (Materialize.stageLazy): without it every iteration re-derives the
+    * first-touch aggregate and chain window, tripling the shuffle count
+    * of the unrolled plan.
     */
   def pagerank(events: DataFrame): DataFrame =
     ranks(temporalEdges(events))

@@ -38,8 +38,9 @@ import org.apache.spark.sql.functions._
   * driver — each iteration is one row-local assignment map (centroids
   * broadcast as literals) plus one (cid, dim)-keyed partial aggregation;
   * only the K×64-long model state is collected between iterations. The
-  * quantized corpus is staged once (Materialize.stage) so T iterations do
-  * not re-read parquet T times.
+  * quantized corpus is staged once per dataset (Materialize.stageShared,
+  * memoized in [[stagedPts]]) so T iterations do not re-read parquet T
+  * times.
   */
 object KMeansOps {
 
@@ -167,24 +168,23 @@ object KMeansOps {
     }
   }
 
-  /** Memo of the Lloyd's model sequence, keyed by (applicationId, data dir,
-    * dataset fingerprint): states(i) is the model after i iterations
-    * (states(0) = the vec_id<K seeds). Training is deterministic, so the
-    * sequence is a pure function of the dataset and every consumer shares
-    * one training run — kmeans_centroids trains 2 iterations, the IVF
-    * search queries extend the SAME sequence to 3 instead of retraining
-    * from scratch. That is the 100 TB posture: the coarse quantizer is an
-    * index artifact built once, not a per-query cost. Cached state is
-    * O(K·Dims) longs per dataset.
-    *
-    * The fingerprint (file names + lengths + mtimes of the embeddings
-    * parquet under the dir) invalidates the memo if a harness rewrites the
-    * dataset in place within one application — without it, lloyd would
-    * serve a model trained on the old data while the DuckDB oracle retrains
-    * on the new, a silent verify mismatch.
-    */
-  private[graft] val models =
-    scala.collection.mutable.Map.empty[(String, String, String), Vector[Seq[(Int, Array[Long], Long)]]]
+  /** One Lloyd's model sequence: `states(i)` is the model after i
+    * iterations (`states(0)` = the vec_id < k seeds), `key` its artifact
+    * key. [[lloyd]] extends it under the holder's lock. */
+  private final class LloydModel(val key: String,
+                                 var states: Vector[Seq[(Int, Array[Long], Long)]])
+
+  /** The Lloyd's model sequences, one per (dataset, k, dims, tag).
+    * Training is deterministic, so a sequence is a pure function of the
+    * dataset and every consumer shares one training run — kmeans_centroids
+    * trains 2 iterations, the IVF search queries extend the SAME sequence
+    * to 3 instead of retraining from scratch. The coarse quantizer is an
+    * index artifact built once, not a per-query cost; cached state is
+    * O(k·dims) longs per model. The dataset fingerprint in the memo key
+    * keeps a harness that rewrites the dataset in place from being served
+    * a model trained on the old data while the DuckDB oracle retrains on
+    * the new. */
+  private val models = new graft.DatasetMemo[LloydModel]()
 
   /** Cross-session persistence of the iteration-state sequence: one row
     * per (iteration, centroid), order restored from explicit columns. A
@@ -215,78 +215,55 @@ object KMeansOps {
         }.toVector
       })
 
-  /** Metadata fingerprint of `d`/embeddings.parquet — see
-    * [[graft.DatasetFingerprint]] for the tradeoffs. Superseded
-    * fingerprints for the same (app, dir) are evicted on insert in
-    * [[lloyd]]. */
-  private def datasetFingerprint(d: String): String =
-    graft.DatasetFingerprint.of(d, "embeddings.parquet")
-
   /** Lloyd's for `iters` iterations over the dataset at `d`. Seeds from
-    * vec_id 0..K-1. Collects only the K×Dims model state per iteration
-    * (O(k·d), not O(n)); iterations already in [[models]] are not re-run.
-    * This memo stays hand-rolled rather than a [[graft.DatasetMemo]]
-    * because its value EXTENDS per call (a later caller may need more
-    * iterations appended to the cached vector) — the build-once helper's
-    * outside-the-lock race would lose extensions. */
+    * vec_id 0..k-1. Collects only the k×dims model state per iteration
+    * (O(k·d), not O(n)); iterations already in the memoized (or persisted)
+    * sequence are not re-run. */
   private[graft] def lloyd(pts: DataFrame, d: String, iters: Int,
                            k: Int = K, dims: Int = Dims,
-                           tag: String = ""): Seq[(Int, Array[Long], Long)] =
-    synchronized {
-      require(k < CompBase, s"k=$k must stay below CompBase=$CompBase " +
-        "(the composite argmin encodes cid in the low digits)")
-      val spark = pts.sparkSession
-      // k AND dims are part of the identity: a scale caller
-      // (tools/IvfScaleSmoke trains k=256) must not collide with the
-      // registry's k=8 model in either the in-process memo or the
-      // persisted artifact, and two sub-space geometries of equal k on
-      // the same dataset (e.g. M=4×16 vs M=8×8 PQ slicings) must not
-      // share a codebook of the wrong width — dims in the key makes the
-      // slice geometry part of the model identity rather than an
-      // accident of which k each caller picked. `tag` extends the
-      // identity the same way for sub-space models (the PQ trainer fits
-      // one codebook per vector slice over the SAME dataset dir —
-      // "-pq0".."-pqM"); full-space callers leave dims/tag defaulted.
-      val fp = datasetFingerprint(d)
-      val key = (spark.sparkContext.applicationId, d, s"$fp-k$k-d$dims$tag")
-      var states = models.getOrElse(key,
-        graft.ArtifactStore.load(spark, modelPersistence, d, key._3)
-          .getOrElse {
-            val seeds = pts.filter(col("vec_id") < k)
-              .select(col("vec_id"), col("qv")).collect()
-              .map(r => (r.getLong(0).toInt, r.getSeq[Long](1).toArray, 0L))
-              .sortBy(_._1).toSeq
-            Vector(seeds)
-          })
-      val persistedLen = states.length
-      while (states.length <= iters) {
-        val cur = states.last
-        val rows = sums(withCid(pts, cur.map(c => (c._1, c._2)))).collect()
-        states = states :+ nextCents(cur, rows, dims)
-      }
-      // write through only when this call actually extended the sequence,
-      // and REPLACE the persisted artifact: the model extends across
-      // sessions, and a deeper state must supersede a shallower persisted
-      // one or every fresh session permanently re-pays the iterations
-      // beyond the first-ever persisted depth. The swap publishes whole
-      // directories, so a racing reader sees old, new, or missing-⇒rebuild
-      // — never a torn mix.
-      if (states.length > persistedLen)
-        graft.ArtifactStore.save(spark, modelPersistence, d, key._3, states,
-          replace = true)
-      // an in-place rewrite changes the fingerprint: drop entries the new
-      // fingerprint supersedes for the same (app, dir) so stale models
-      // don't accumulate over a long-lived application. Compare on the
-      // FINGERPRINT portion only (key._3 is "<fp>-k<k>"): a different k
-      // trained on the same, still-current dataset is a sibling model,
-      // not a stale one — evicting it would force a full retrain on
-      // every k alternation when the artifact store is disabled.
-      models.keys.filter(e => e._1 == key._1 && e._2 == key._2 &&
-          !e._3.startsWith(s"$fp-k"))
-        .toSeq.foreach(models.remove)
-      models(key) = states
-      states(iters)
+                           tag: String = ""): Seq[(Int, Array[Long], Long)] = {
+    require(k < CompBase, s"k=$k must stay below CompBase=$CompBase " +
+      "(the composite argmin encodes cid in the low digits)")
+    val spark = pts.sparkSession
+    // k AND dims are part of the identity: a scale caller
+    // (tools/IvfScaleSmoke trains k=256) must not collide with the
+    // registry's k=8 model in either the in-process memo or the
+    // persisted artifact, and two sub-space geometries of equal k on
+    // the same dataset (e.g. M=4×16 vs M=8×8 PQ slicings) must not
+    // share a codebook of the wrong width. `tag` extends the identity
+    // the same way for sub-space models (the PQ trainer fits one
+    // codebook per vector slice over the SAME dataset dir —
+    // "-pq0".."-pqM"); full-space callers leave dims/tag defaulted.
+    // The persisted directory name stays "<fp>-k<k>-d<dims><tag>".
+    val model = models.keyed(spark, d, "embeddings.parquet",
+        s"-k$k-d$dims$tag") { key =>
+      new LloydModel(key,
+        graft.ArtifactStore.load(spark, modelPersistence, d, key).getOrElse {
+          Vector(pts.filter(col("vec_id") < k)
+            .select(col("vec_id"), col("qv")).collect()
+            .map(r => (r.getLong(0).toInt, r.getSeq[Long](1).toArray, 0L))
+            .sortBy(_._1).toSeq)
+        })
     }
+    model.synchronized {
+      if (model.states.length <= iters) {
+        while (model.states.length <= iters) {
+          val cur = model.states.last
+          val rows = sums(withCid(pts, cur.map(c => (c._1, c._2)))).collect()
+          model.states = model.states :+ nextCents(cur, rows, dims)
+        }
+        // REPLACE the persisted artifact: the model extends across
+        // sessions, and a deeper state must supersede a shallower
+        // persisted one or every fresh session permanently re-pays the
+        // iterations beyond the first-ever persisted depth. The swap
+        // publishes whole directories, so a racing reader sees old, new,
+        // or missing-⇒rebuild — never a torn mix.
+        graft.ArtifactStore.save(spark, modelPersistence, d, model.key,
+          model.states, replace = true)
+      }
+      model.states(iters)
+    }
+  }
 
   // ---- oracle-side twin -----------------------------------------------------
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GQuery, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Relational generalizations of the reference's state lookups (SURVEY §2.3-2.5):
@@ -924,64 +924,60 @@ object RelationalOps {
         |  WHERE q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
         |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))""".stripMargin))
 
+  /** One relationship's (n_c, n_p) key multiplicities for [[dqReferential]]:
+    * one union + groupBy, so the shuffle carries map-side-combined
+    * (k, c, p) partials. NULL keys need join semantics, not the groupBy's
+    * nulls-group-together: NULL-key children are all orphans and NULL-key
+    * parents all childless, so the NULL group emits a child-only row and
+    * a parent-only row, each only when that side has NULL keys. A zero
+    * count maps to NULL, which [[dqAudit]] reads as "no match". */
+  private[operators] def dqKeyed(name: String,
+      child: DataFrame, ck: String,
+      parent: DataFrame, pk: String): DataFrame = {
+    val u = child.select(col(ck).as("k"), lit(1L).as("c"), lit(0L).as("p"))
+      .union(parent.select(col(pk).as("k"), lit(0L).as("c"), lit(1L).as("p")))
+    val nn = (n: Column) => when(n > 0, n)
+    val none = lit(null).cast("long")
+    val childOnly = struct(nn(col("cn")).as("n_c"), none.as("n_p"))
+    val parentOnly = struct(none.as("n_c"), nn(col("pn")).as("n_p"))
+    u.groupBy("k").agg(sum("c").as("cn"), sum("p").as("pn"))
+      .select(explode(
+        when(col("k").isNotNull,
+          array(struct(nn(col("cn")).as("n_c"), nn(col("pn")).as("n_p"))))
+        .when(col("pn") === 0, array(childOnly))
+        .when(col("cn") === 0, array(parentOnly))
+        .otherwise(array(childOnly, parentOnly))).as("s"))
+      .select(lit(name).as("relationship"),
+        col("s.n_c").as("n_c"), col("s.n_p").as("n_p"))
+  }
+
+  /** The four [[dqReferential]] counts per relationship over the union of
+    * [[dqKeyed]] frames, as ONE aggregate keyed by the relationship tag:
+    * partial aggregation reduces every partition to ≤ 4 rows map-side. */
+  private[operators] def dqAudit(frames: Seq[DataFrame]): DataFrame =
+    frames.reduce(_ union _)
+      .groupBy("relationship")
+      .agg(
+        sum(coalesce(col("n_c"), lit(0L))).as("n_child"),
+        sum(when(col("n_p").isNull, col("n_c")).otherwise(lit(0L)))
+          .as("n_orphans"),
+        sum(coalesce(col("n_p"), lit(0L))).as("n_parent"),
+        sum(when(col("n_c").isNull, col("n_p")).otherwise(lit(0L)))
+          .as("n_childless"))
+
   /** Q:dq_referential — the warehouse data-quality audit: for each
     * foreign-key relationship, child/parent cardinalities, orphaned
     * children (FK without a parent — 0 on a consistent feed; the alert
     * column), and childless parents (dimension rows no fact references —
     * legitimately nonzero, the "dead inventory" readout). Each
-    * relationship is ONE scan per table: both sides pre-aggregate to
-    * (key, multiplicity) — map-side combinable, the shuffle carries
-    * distinct keys — then a co-keyed full-outer join feeds a single
-    * conditional aggregate producing all four counts (the naive
-    * independent-subtree formulation re-scans the child three times,
-    * which at 100 TB is the whole cost). Relationships union into one
+    * relationship is ONE scan per table: both sides union into one
+    * (key, multiplicity) aggregate — map-side combinable, the shuffle
+    * carries distinct keys — which feeds a single conditional aggregate
+    * producing all four counts (the naive independent-subtree formulation
+    * re-scans the child three times, which at 100 TB is the whole cost). Relationships union into one
     * audit frame; nothing quadratic, nothing driver-side.
     */
   val dqReferential: GQuery = {
-    // r19: each relationship contributes its TAGGED full-outer key frame
-    // and the four 1-row reductions collapse into ONE final aggregate
-    // over the union, keyed by the relationship tag — partial aggregation
-    // reduces every partition to ≤ 4 rows map-side, so the tag-keyed
-    // shuffle moves a handful of partials at any scale while four
-    // separate final-aggregate stages (and the union of their 1-row
-    // results) disappear from the schedule.
-    // r20 (guide §2.4): the two per-side aggregates + co-keyed full-outer
-    // join become ONE union + groupBy per relationship — the tagged union
-    // shuffles one set of map-side-combined (k, c, p) partials where the
-    // join shape paid two partial exchanges and a sort-merge. NULL keys
-    // need the join's non-matching semantics, not the groupBy's
-    // nulls-group-together: the NULL-key group explodes into a
-    // child-only row (those children are all orphans) and a parent-only
-    // row (those parents all childless), exactly what the full-outer
-    // join produced as two unmatched sides. A zero count maps to NULL so
-    // the downstream conditional aggregate reads unchanged.
-    def keyedDf(name: String,
-        child: org.apache.spark.sql.DataFrame, ck: String,
-        parent: org.apache.spark.sql.DataFrame, pk: String) = {
-      val u = child.select(col(ck).as("k"), lit(1L).as("c"), lit(0L).as("p"))
-        .union(parent.select(col(pk).as("k"), lit(0L).as("c"), lit(1L).as("p")))
-      val nn = (n: org.apache.spark.sql.Column) => when(n > 0, n)
-      u.groupBy("k").agg(sum("c").as("cn"), sum("p").as("pn"))
-        .select(explode(when(col("k").isNotNull,
-            array(struct(nn(col("cn")).as("n_c"), nn(col("pn")).as("n_p"))))
-          .otherwise(array(
-            struct(nn(col("cn")).as("n_c"),
-              lit(null).cast("long").as("n_p")),
-            struct(lit(null).cast("long").as("n_c"),
-              nn(col("pn")).as("n_p"))))).as("s"))
-        .select(lit(name).as("relationship"),
-          col("s.n_c").as("n_c"), col("s.n_p").as("n_p"))
-    }
-    def auditAll(frames: Seq[org.apache.spark.sql.DataFrame]) =
-      frames.reduce(_ union _)
-        .groupBy("relationship")
-        .agg(
-          sum(coalesce(col("n_c"), lit(0L))).as("n_child"),
-          sum(when(col("n_p").isNull, col("n_c")).otherwise(lit(0L)))
-            .as("n_orphans"),
-          sum(coalesce(col("n_p"), lit(0L))).as("n_parent"),
-          sum(when(col("n_c").isNull, col("n_p")).otherwise(lit(0L)))
-            .as("n_childless"))
     def duckAudit(name: String, c: String, ck: String,
         p: String, pk: String) =
       s"""SELECT '$name' AS relationship,
@@ -998,8 +994,8 @@ object RelationalOps {
       ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"))
     GQuery(
       "dq_referential",
-      (s, d) => auditAll(rels.map { case (name, c, ck, p, pk) =>
-        keyedDf(name, Tables.table(s, d, c), ck, Tables.table(s, d, p), pk)
+      (s, d) => dqAudit(rels.map { case (name, c, ck, p, pk) =>
+        dqKeyed(name, Tables.table(s, d, c), ck, Tables.table(s, d, p), pk)
       }),
       oracle = Some(rels.map { case (name, c, ck, p, pk) =>
         duckAudit(name, c, ck, p, pk)

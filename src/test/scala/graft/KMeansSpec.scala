@@ -87,20 +87,12 @@ class KMeansSpec extends SparkSuite {
     Files.copy(Paths.get(smokeDir, "embeddings.parquet"),
       Paths.get(ds, "embeddings.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val staged = Materialize.stage(KMeansOps.quantized(spark, ds))
-    val app = spark.sparkContext.applicationId
-    def kept: Set[String] =
-      KMeansOps.models.keys.collect {
-        case (a, d, f) if a == app && d == ds => f.substring(f.lastIndexOf("-k"))
-      }.toSet
     val mk4 = KMeansOps.lloyd(staged, ds, 1, k = 4)
-    KMeansOps.lloyd(staged, ds, 1, k = 6)
-    // dims is part of the model identity since round 17 (ADVICE: two
-    // sub-space geometries of equal k must not share a codebook width)
-    assert(kept === Set("-k4-d64", "-k6-d64"),
-      s"training k=6 must not evict the still-current k=4 sibling: $kept")
+    val mk6 = KMeansOps.lloyd(staged, ds, 1, k = 6)
     // alternating back must serve the memoized states object, not retrain
-    assert(KMeansOps.lloyd(staged, ds, 1, k = 4).eq(mk4) ||
-           KMeansOps.lloyd(staged, ds, 1, k = 4) == mk4,
+    assert(KMeansOps.lloyd(staged, ds, 1, k = 4) eq mk4,
+      "training k=6 evicted the still-current k=4 sibling")
+    assert(KMeansOps.lloyd(staged, ds, 1, k = 6) eq mk6,
       "k alternation retrained instead of serving the memo")
   }
 

@@ -2,18 +2,17 @@ package graft
 
 import java.nio.file.Files
 
-/** The one materialization policy behind every staged intermediate:
-  * localCheckpoint by default, reliable checkpoint into
-  * spark.graft.checkpoint.dir when set — same data either way.
+/** The one materialization policy behind every staged intermediate, in
+  * its two tiers: [[Materialize.stage]] and [[Materialize.stageLazy]] are
+  * always localCheckpoint; [[Materialize.stageShared]] writes reliable
+  * checkpoint files under [[Materialize.SharedDirConfKey]] when it is set
+  * — same data either way.
   */
 class MaterializeSpec extends SparkSuite {
 
   test("default stages via localCheckpoint; conf switches to reliable dir") {
     import spark.implicits._
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-
-    val local = Materialize.stage(df)
-    assert(local.count() === 100)
 
     // one SparkContext serves every suite and keeps the first checkpoint
     // dir any of them set (Materialize refuses a conflicting one)
@@ -23,17 +22,22 @@ class MaterializeSpec extends SparkSuite {
       val walk = Files.walk(java.nio.file.Paths.get(dir.stripPrefix("file:")))
       try walk.filter(Files.isRegularFile(_)).count() finally walk.close()
     }
-    val before = files()
-    spark.conf.set(Materialize.DirConfKey, dir)
+    def keys(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.getLong(0)).sorted.toSeq
+    spark.conf.set(Materialize.SharedDirConfKey, dir)
     try {
-      val reliable = Materialize.stage(df)
-      assert(reliable.count() === 100)
-      assert(reliable.collect().map(_.getLong(0)).sorted ===
-        local.collect().map(_.getLong(0)).sorted)
-      // the reliable path actually wrote RDD checkpoint data under dir
+      val before = files()
+      val local = Materialize.stage(df)
+      val lazyLocal = Materialize.stageLazy(df)
+      assert(keys(local) === (1L to 100L))
+      assert(keys(lazyLocal) === (1L to 100L))
+      assert(files() === before, "stage/stageLazy wrote checkpoint files")
+
+      val shared = Materialize.stageShared(df)
+      assert(keys(shared) === keys(local))
       assert(files() > before, s"expected checkpoint files under $dir")
     } finally {
-      spark.conf.unset(Materialize.DirConfKey)
+      spark.conf.unset(Materialize.SharedDirConfKey)
     }
   }
 

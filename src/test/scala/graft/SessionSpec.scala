@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** The one session recipe: its function install replaces nothing, its
   * shared checkpoint dir keeps memo frames alive across [[Session.releaseStaged]],
-  * and no other main builds a session of its own.
+  * no other main builds a session of its own, and no library code outside
+  * [[Materialize]] stages a frame by hand.
   */
 class SessionSpec extends SparkSuite {
 
@@ -55,16 +56,27 @@ class SessionSpec extends SparkSuite {
     assert(!digests.head.endsWith(" 0"), "kmeans_centroids returned no rows")
   }
 
-  test("no main outside Session builds its own SparkSession") {
+  /** Main-source files (relative to src/main/scala) whose text matches. */
+  private def sourcesMatching(p: String => Boolean): Seq[String] = {
     val root = Paths.get("src/main/scala")
     val walk = Files.walk(root)
-    val builders =
-      try walk.filter(_.toString.endsWith(".scala")).toArray.toSeq
-        .map(_.asInstanceOf[Path])
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(p => root.relativize(p).toString)
-      finally walk.close()
-    assert(builders === Seq("graft/Session.scala"))
+    try walk.filter(_.toString.endsWith(".scala")).toArray.toSeq
+      .map(_.asInstanceOf[Path])
+      .filter(f => p(Files.readString(f)))
+      .map(f => root.relativize(f).toString).sorted
+    finally walk.close()
+  }
+
+  test("no main outside Session builds its own SparkSession") {
+    assert(sourcesMatching(_.contains("SparkSession.builder")) ===
+      Seq("graft/Session.scala"))
+  }
+
+  test("only Materialize stages, checkpoints or caches a frame outside tools/") {
+    val call = """\.(localCheckpoint\b|checkpoint\(|persist\(|cache\(\))""".r
+    val offenders = sourcesMatching(call.findFirstIn(_).isDefined)
+      .filterNot(f => f == "graft/Materialize.scala" || f.startsWith("graft/tools/"))
+    assert(offenders === Seq(), "stage through graft.Materialize instead")
   }
 }
 
