@@ -64,7 +64,7 @@ final case class GQuery(
 /** Loaders for the driver testbed (TESTDATA.md). One parquet file per table. */
 object Tables {
 
-  /** Opt-in task-retry fault injection (see [[graft.tools.RetryAudit]]).
+  /** Opt-in task-retry fault injection (see `graft.tools.Audit retry`).
     * When this session conf is "true", every table load gains a
     * pass-through barrier whose task FAILS on its first attempt — so the
     * scan stage of every registry query executes under real Spark task
@@ -85,7 +85,7 @@ object Tables {
 
   /** Companion fault point for POST-SHUFFLE stages: when "true",
     * [[graft.Materialize.stage]] inserts a [[retryFaultBarrier]] above the
-    * frame it checkpoints, and [[graft.tools.RetryAudit]] wraps every
+    * frame it checkpoints, and `graft.tools.Audit retry` wraps every
     * query's RESULT frame the same way — so the final stage (downstream of
     * the query's last Exchange wherever one exists) fails attempt 0 and
     * re-executes its merge over the already-written shuffle partials. That

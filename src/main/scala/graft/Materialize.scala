@@ -73,7 +73,7 @@ object Materialize {
   def stageLazy[T](df: Dataset[T]): Dataset[T] =
     withRetryBarrier(df).localCheckpoint(eager = false)
 
-  /** Audit-only fault point (graft.tools.RetryAudit): staged intermediates
+  /** Audit-only fault point (`graft.tools.Audit retry`): staged intermediates
     * are computed by their own checkpoint job, so a barrier here makes that
     * job's final stage — post-shuffle wherever the staged frame shuffles —
     * fail attempt 0 and re-execute over the written partials. */

@@ -63,8 +63,9 @@ object Verify {
     System.err.println(s"[verify] nonvacuity: ${vac.size} of ${counts.size} " +
       s"below manifest floor${if (vac.nonEmpty) ": " + vac.map(_._1).mkString(",") else ""}")
     // completion marker: distinguishes a finished dump from stale output of
-    // an earlier run when a later invocation dies before writing anything
-    System.err.println(s"[verify] done: ${SparkEntry.queries.size} queries dumped")
+    // an earlier run when a later invocation dies before writing anything;
+    // counts only the queries actually written (a failed one is absent)
+    System.err.println(s"[verify] done: ${counts.size} queries dumped")
     Session.stop(spark)
   }
 }

@@ -874,6 +874,14 @@ object DedupOps {
     * A doc under [[SubstrWindow]] tokens hashes to an empty array and
     * drops out of the posexplode. Shared by the window-fraction query and
     * the maximal-run merge below.
+    *
+    * Single-split trade-off: nothing spreads the scan before the hashing,
+    * so the CPU-bound window-hash kernel runs with the documents table's
+    * scan parallelism. A multi-split input hashes on every core; a corpus
+    * that lands in ONE scan split hashes on one core before the window
+    * exchange. The removed up-front repartition avoided that but shuffled
+    * the raw text once more on every input; a conditional spread for
+    * few-split scans is the fix if that case matters.
     */
   private def substrWindowRows(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorExpressions.ensureRegistered(s)

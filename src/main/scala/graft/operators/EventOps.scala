@@ -398,7 +398,7 @@ object EventOps {
         .select(col("event_id"), col("user_id"), col("event_type"))
       // app-id + invocation counter: the dir must be unique PER CALL, not
       // just per app — two concurrent callers on one shared session (the
-      // multi-tenant shape ConcurrencyAudit drives, possibly over
+      // multi-tenant shape `Audit concurrency` drives, possibly over
       // DIFFERENT datasets) would otherwise clobber each other's
       // _temporary mid-write, and a caller holding the returned LAZY
       // DataFrame would read whatever a later invocation overwrote.
@@ -696,7 +696,7 @@ object EventOps {
       // Dataset-API groupingSets, NOT a fixed-name temp view + spark.sql:
       // a shared session is the normal multi-tenant deployment, and two
       // concurrent callers registering the same view name over different
-      // datasets would cross-resolve (ConcurrencyAudit pins the registry
+      // datasets would cross-resolve (`Audit concurrency` pins the registry
       // is safe to run N-way on one session)
       gameView(s, d)
         .groupingSets(Seq(Seq(col("room")), Seq(col("event_type"))),

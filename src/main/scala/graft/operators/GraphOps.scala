@@ -493,67 +493,27 @@ object GraphOps {
     bench = true)
 
   /** Hop bound for [[bfsHops]] — deep enough to cross the testbed's
-    * communities, small enough that the recursive oracle stays cheap.
-    * COUPLING NOTE (ADVICE r19): bfsFromEdges rebuilds the settled set
-    * each round as a lazy union of every prior level's checkpoint and
-    * unions all levels again for the output, so driver-side plan arms
-    * grow O(hops²) — harmless at 4, but raising this past ~16 should
-    * re-stage the cumulative settled frame once per few hops instead. */
+    * communities, small enough that the recursive oracle stays cheap. */
   final val BfsMaxHops = 4L
 
   /** Q:graph_bfs_hops — single-source BFS hop distance over the
-    * co-occurrence graph, frontier-style: each iteration joins ONLY the
-    * newly-reached frontier against the (staged, both-direction) edge
-    * frame, anti-joins the visited set, and appends — so total join work
-    * is O(Σ frontier-adjacent edges) ≤ O(m·hops) and each node is
-    * settled exactly once at its minimum hop (no min-aggregate needed:
-    * level-synchronous BFS discovers in hop order by construction). The
-    * seed is the graph's smallest node id, derived IN the plan (u < v
-    * invariant ⇒ min(u)), so there is no driver-side collect. Unreached
-    * nodes are absent (not NULL-hop), keeping the output total-ordered
-    * by user_id.
+    * co-occurrence graph: the [[relaxFrom]] loop at unit edge weight.
+    * With every weight 1 a node improves only the round it is first
+    * reached, so each round's frontier is exactly the newly-reached level
+    * and the loop is level-synchronous BFS: total join work is
+    * O(Σ frontier-adjacent edges) ≤ O(m·hops). The seed is the graph's
+    * smallest node id, derived IN the plan (u < v invariant ⇒ min(u)), so
+    * there is no driver-side collect. Unreached nodes are absent (not
+    * NULL-hop), keeping the output total-ordered by user_id.
     */
   def bfsHops(events: DataFrame): DataFrame =
     bfsFromEdges(graft.Materialize.stageLazy(cooccurrenceEdges(events)))
 
-  /** The frontier loop over an explicit undirected edge frame — the seam
+  /** BFS over an explicit undirected edge frame (u, v) — the seam
     * GraphSpec pins against hand-traced hop distances. */
-  private[graft] def bfsFromEdges(und: DataFrame): DataFrame = {
-    // r19 optimization-round shape (guide §2.3/§2.4):
-    //  - the both-direction edge frame is staged PRE-PARTITIONED on src
-    //    (repartition + checkpoint ⇒ LogicalRDD carries the hash
-    //    partitioning), so each round's frontier⋈edges join re-shuffles
-    //    only the frontier — the corpus-sized frame crosses the network
-    //    ONCE at any scale instead of once per hop;
-    //  - the settled set is a LAZY UNION of the staged per-hop frontiers
-    //    instead of a re-staged frame per round: the old shape re-wrote
-    //    every settled node each hop (O(n·hops) materialized bytes and
-    //    one extra checkpoint job per round) just to feed the anti-join,
-    //    which reads the same checkpointed blocks either way;
-    //  - stageLazy merges each frontier checkpoint's final
-    //    materialization job into its first consumer (next hop's join).
-    val edges = graft.Materialize.stageLazy(
-      und.select(col("u").as("src"), col("v").as("dst"))
-        .union(und.select(col("v").as("src"), col("u").as("dst")))
-        .repartition(col("src")))
-    // seed off the STAGED frame (min src over both directions = min u)
-    // rather than re-walking the input pair derivation; staged because
-    // every level union references it
-    var frontier = graft.Materialize.stageLazy(
-      edges.agg(min("src").as("x")).select(col("x"), lit(0L).as("hops")))
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    for (i <- 1L to BfsMaxHops) {
-      val settled = levels.reduce(_ union _)
-      frontier = graft.Materialize.stageLazy(
-        frontier.join(edges, col("x") === col("src"))
-          .select(col("dst").as("x"), lit(i).as("hops"))
-          .distinct()
-          .join(settled, Seq("x"), "left_anti"))
-      levels += frontier
-    }
-    levels.reduce(_ union _)
-      .orderBy("x").select(col("x").as("user_id"), col("hops"))
-  }
+  private[graft] def bfsFromEdges(und: DataFrame): DataFrame =
+    relaxFrom(und.withColumn("w", lit(1L)), BfsMaxHops.toInt)
+      .withColumnRenamed("cost", "hops")
 
   val graphBfsHops = GQuery(
     "graph_bfs_hops",
@@ -609,32 +569,39 @@ object GraphOps {
   def ssspWeighted(events: DataFrame): DataFrame =
     ssspFromEdges(graft.Materialize.stageLazy(weightedCoocEdges(events)))
 
-  /** The delta-relaxation loop over an explicit weighted edge frame
-    * (u, v, cnt) — the seam GraphSpec pins against hand-traced costs. */
-  private[graft] def ssspFromEdges(wund: DataFrame): DataFrame = {
-    // r19 optimization-round shape (guide §2.3/§2.4):
-    //  - edges staged PRE-PARTITIONED on src, as in [[bfsFromEdges]]:
-    //    the corpus-sized frame shuffles once, not once per round;
-    //  - ONE flag-carrying aggregate per round replaces the old
-    //    merge-then-compare-join: previous distances enter with f = 0,
-    //    candidate relaxations with f = 1, and
-    //    min(CASE WHEN f = 0 THEN cost END) recovers the previous cost
-    //    next to the merged min — so the frontier ("did this node
-    //    improve?") is a row-local filter over the SAME staged frame
-    //    instead of a second staged join of the full distance table
-    //    (one checkpoint job and one n-sized join removed per round).
-    val w = wund.withColumn("w", expr(costExpr("cnt")))
+  /** SSSP over an explicit weighted edge frame (u, v, cnt) — the seam
+    * GraphSpec pins against hand-traced costs. */
+  private[graft] def ssspFromEdges(wund: DataFrame): DataFrame =
+    relaxFrom(wund.withColumn("w", expr(costExpr("cnt"))), SsspMaxRounds)
+
+  /** The delta-relaxation loop behind [[bfsFromEdges]] and
+    * [[ssspFromEdges]]: min-cost distance (user_id, cost) from the
+    * smallest node id within `rounds` relaxations over an undirected edge
+    * frame (u, v, w) with integer weights w ≥ 1.
+    *  - edges staged PRE-PARTITIONED on src (repartition + checkpoint ⇒
+    *    LogicalRDD carries the hash partitioning), so each round's
+    *    frontier⋈edges join re-shuffles only the frontier — the
+    *    corpus-sized frame crosses the network ONCE, not once per round;
+    *  - ONE flag-carrying aggregate per round: previous distances enter
+    *    with f = 0, candidate relaxations with f = 1, and
+    *    min(CASE WHEN f = 0 THEN cost END) recovers the previous cost
+    *    next to the merged min — so the frontier ("did this node
+    *    improve?") is a row-local filter over the SAME staged frame
+    *    instead of a second staged join of the full distance table;
+    *  - stageLazy merges each round's checkpoint materialization job into
+    *    its first consumer (the next round's join).
+    */
+  private def relaxFrom(und: DataFrame, rounds: Int): DataFrame = {
     val edges = graft.Materialize.stageLazy(
-      w.select(col("u").as("src"), col("v").as("dst"), col("w"))
-        .union(w.select(col("v").as("src"), col("u").as("dst"), col("w")))
+      und.select(col("u").as("src"), col("v").as("dst"), col("w"))
+        .union(und.select(col("v").as("src"), col("u").as("dst"), col("w")))
         .repartition(col("src")))
     // seed off the STAGED frame (min src over both directions = min u):
-    // an agg over wund here would re-derive the whole weighted-edge
-    // subtree a second time
+    // an agg over the input here would re-derive its whole subtree
     var dist = graft.Materialize.stageLazy(
       edges.agg(min("src").as("x")).select(col("x"), lit(0L).as("cost")))
     var frontier = dist
-    for (round <- 1 to SsspMaxRounds) {
+    for (round <- 1 to rounds) {
       val cand = frontier.join(edges, col("x") === col("src"))
         .select(col("dst").as("x"), (col("cost") + col("w")).as("cost"),
           lit(1).as("f"))
@@ -645,7 +612,7 @@ object GraphOps {
       dist = merged.select("x", "cost")
       // improved = newly reached (no f=0 row) or strictly cheaper; the
       // last round's frontier has no consumer — don't derive it
-      if (round < SsspMaxRounds)
+      if (round < rounds)
         frontier = merged
           .filter(col("old").isNull || col("cost") < col("old"))
           .select("x", "cost")

@@ -40,7 +40,7 @@ object LcgSourceOps {
       // the retry-fault flag travels as a READ OPTION, resolved here from
       // the session that owns this query — an ambient SparkSession.active
       // lookup inside the source would read whichever session happens to
-      // be active on the PLANNING thread (graft.tools.RetryAudit)
+      // be active on the PLANNING thread (`graft.tools.Audit retry`)
       .option("retryFault", s.conf.get(graft.Tables.RetryFaultKey, "false"))
       .load()
   }

@@ -51,7 +51,7 @@ object TextOps {
           // ANSI off via legacy sizeOfNull, NULL with ANSI on); array_size
           // null-propagates under EITHER setting, matching len(NULL) in
           // the oracle. Same substitution at every projection-position
-          // size() over a nullable-text token array (ModeAudit catch).
+          // size() over a nullable-text token array (`Audit mode` catch).
           array_size(filter_exprs(split(col("text"), " "))).as("n_tokens"),
           length(col("text")).as("n_chars_actual"),
           col("n_chars")),
@@ -445,7 +445,7 @@ object TextOps {
           // lower() under the default UTF8_BINARY collation falls back
           // to JVM-default-locale casing the moment the string holds
           // ANY non-ASCII char (tr-TR then lowers 'I' to dotless 'ı' —
-          // executor-locale-dependent output on a mixed fleet; ModeAudit
+          // executor-locale-dependent output on a mixed fleet; `Audit mode`
           // catch). ICU-collated lower() cases by Unicode root rules —
           // bit-identical to root-locale lower() and to the DuckDB
           // oracle — and the re-collate back to UTF8_BINARY keeps the

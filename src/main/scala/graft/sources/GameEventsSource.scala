@@ -64,7 +64,7 @@ class GameEventsTable(options: CaseInsensitiveStringMap)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
 
-  // the retry-fault flag (graft.tools.RetryAudit) arrives as a READ
+  // the retry-fault flag (`graft.tools.Audit retry`) arrives as a READ
   // OPTION set by the caller from ITS session conf — never from
   // SparkSession.active, which is thread-local and would read the wrong
   // session's conf when two sessions coexist in one JVM (the audit's own

@@ -1,7 +1,7 @@
 package graft.tools
 
-/** Result-set canonicalization shared by the invariance gates
-  * ([[DeterminismAudit]], [[ModeAudit]]): rows formatted cell-by-cell and
+/** Result-set canonicalization shared by the invariance gates ([[Audit]])
+  * and the benchmark's answer check: rows formatted cell-by-cell and
   * sorted, map cells entry-sorted, doubles at 9 significant digits so
   * partial-aggregation reassociation noise below the house round()/scaled-
   * integer contract doesn't false-positive, then SHA-256 over the sorted
@@ -11,7 +11,7 @@ package graft.tools
 object Canon {
 
   /** The canonical form must itself be independent of the JVM's default
-    * locale and timezone, or [[ModeAudit]]'s tz/locale axis measures the
+    * locale and timezone, or `Audit mode`'s tz/locale axis measures the
     * formatter instead of the query (the f-interpolator's %e renders a
     * Turkish decimal comma; `java.sql.Timestamp.toString` renders the
     * instant in the default zone). Hence Locale.ROOT formatting and

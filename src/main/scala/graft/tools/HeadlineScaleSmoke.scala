@@ -210,7 +210,12 @@ object HeadlineScaleSmoke {
     // 10× the honest work instead of the ×100 cross-replica pair blowup
     // ten verbatim copies would fabricate (the c_name lesson, applied to
     // text). n_chars is left at its source value (no query cross-checks
-    // it against length(text)).
+    // it against length(text)). One exception: DedupOps.SubstrBoiler is
+    // planted at QUERY time without a replica suffix, so its window-hash
+    // group is shared by all 10 replicas and grows 10x — the marking is
+    // unchanged (df >= 2 already held within each replica), but that one
+    // group is a hot key the source tier does not have; read a
+    // super-linear dedup_substring_* time with it in mind.
     val docB = base(src("documents"), "doc_id")
     replicate("documents", Seq("doc_id" -> docB), (d, i) =>
       if (i == 0) d

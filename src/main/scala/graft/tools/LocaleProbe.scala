@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Scratch probe: which Spark string functions read the JVM default
   * locale? Runs lower/upper/initcap over case-mapping pivots (ASCII I,
   * dotted İ, dotless ı, sharp ß) under the root locale and under tr-TR,
-  * printing any value that changed. Diagnosis aid for the ModeAudit
+  * printing any value that changed. Diagnosis aid for the `Audit mode`
   * tz/locale axis — not a gate.
   */
 object LocaleProbe {

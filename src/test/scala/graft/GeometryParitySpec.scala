@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 
 /** Continuous slice of the execution-geometry determinism gate
-  * (tools/DeterminismAudit runs ALL queries under two full session
+  * (`tools.Audit geometry` runs ALL queries under two full session
   * geometries per round; this spec runs a representative subset on every
   * `sbt test` so a geometry-sensitive query is caught the round it is
   * INTRODUCED, not at the next audit). Each query runs under the suite's

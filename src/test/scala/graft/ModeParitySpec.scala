@@ -1,7 +1,7 @@
 package graft
 
 /** Continuous slice of the runtime-mode invariance gate
-  * (tools/ModeAudit runs ALL queries under full session-level flips per
+  * (`tools.Audit mode` runs ALL queries under full session-level flips per
   * round; this spec runs a representative subset on every `sbt test` so a
   * mode-sensitive query is caught the round it is INTRODUCED). Three
   * axes are session-conf flips safe to toggle on the shared suite
@@ -18,7 +18,7 @@ package graft
   *    off) — Spark demotes scans per-file on its own, and pushdown must
   *    be pure optimization.
   *
-  * The remaining ModeAudit axis (JVM default timezone/locale) is deliberately
+  * The remaining `Audit mode` axis (JVM default timezone/locale) is deliberately
   * NOT flipped here: it is JVM-global and suites run concurrently in this
   * fork — the per-round tool covers it in a dedicated session.
   */
