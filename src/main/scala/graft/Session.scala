@@ -9,8 +9,10 @@ import org.apache.spark.sql.SparkSession
   * time, no UI, a generated-class cache that holds the whole registry
   * (the default 100 entries thrash across 180+ queries and re-pay Janino
   * compiles inside whichever query runs next), DSV2 key-grouped reads
-  * (GameEventsSource aggregates shuffle-free), and the graft_* native
-  * functions installed once.
+  * (GameEventsSource aggregates shuffle-free), streaming checkpoints
+  * written by [[streaming.LocalCheckpointFileManager]] (Spark's default
+  * manager forks `readlink`/`chmod` per checkpoint file on a local path),
+  * and the graft_* native functions installed once.
   *
   * Per-tool confs go through `conf` and win over the recipe. Tools whose
   * output or gate depends on a fixed worker count pass `workers`
@@ -41,6 +43,8 @@ object Session {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config(streaming.LocalCheckpointFileManager.ConfKey,
+        classOf[streaming.LocalCheckpointFileManager].getName)
     conf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

@@ -141,8 +141,21 @@ object EventStream {
 
   /** S2/S3: the event log as an unbounded stream through the source seam —
     * build the reader from config, normalize to the events-shaped columns.
+    *
+    * The seam also picks how the checkpoints of the queries built on it
+    * are written: when the session names no
+    * `spark.sql.streaming.checkpointFileManagerClass`, it sets
+    * [[LocalCheckpointFileManager]]. Spark's default manager forks a
+    * `readlink` or `chmod` for each checkpoint file on a local path, about
+    * a hundred processes per scoreboard micro-batch, and the state-store
+    * commit waited on them. [[graft.Session.local]] sets the same class;
+    * this covers sessions built elsewhere. A value the session carries is
+    * left as it is.
     */
   def readEvents(spark: SparkSession, cfg: EventSourceConfig): DataFrame = {
+    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
     if (cfg.format == "parquet")
       // nanos-timestamp testdata generations need this conf or the reader
       // rejects the column (Illegal-Parquet-TIMESTAMP(NANOS)); harmless on

@@ -40,6 +40,18 @@ import org.apache.spark.sql.streaming.OutputMode
   * (same run: killCounts 15.0 s / 5.35, lastPerKey 19.4 s / 4.12 at 80M
   * — day-to-day box variance vs the round-13 numbers above, parity
   * exact at every tier.)
+  *
+  * Part of that fixed cost was checkpoint I/O: Spark's default
+  * checkpoint file manager forks `readlink`/`chmod` per checkpoint file on
+  * a local path when Hadoop has no native library, and Session.local now
+  * installs graft.streaming.LocalCheckpointFileManager, which forks none.
+  * Re-recorded at 5M/50 files on a 4-core VM (SPARK_GRAFT_CPUS=4, two
+  * runs each, parity exact in all), before -> after:
+  *   killCounts   9.73 / 10.54 s -> 8.99 / 9.00 s
+  *   lastPerKey  11.40 / 10.71 s -> 9.22 / 10.97 s
+  *   pulsarIngest 5.77 /  6.77 s -> 4.54 / 4.29 s
+  * The rest of the per-batch cost is not broken down by this smoke;
+  * perfbench's traced scoreboard_stream run gives the layers.
   */
 object StreamingThroughputSmoke {
   def main(args: Array[String]): Unit = {

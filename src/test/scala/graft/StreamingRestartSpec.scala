@@ -90,6 +90,74 @@ class StreamingRestartSpec extends SparkSuite {
     assert(after === Set(("room1", "u5", 5L), ("room2", "u7", 1L)))
   }
 
+  // ---- a checkpoint written by one file manager, resumed under another:
+  // Spark's default manager leaves `.<name>.crc` sidecars, graft's none
+
+  private val SparkManager =
+    classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName
+  private val GraftManager = classOf[graft.streaming.LocalCheckpointFileManager].getName
+
+  /** Runs `body` under checkpoint file manager `cls`, restoring the prior
+    * value afterwards (the session is shared across suites). */
+  private def withManager[A](cls: String)(body: => A): A = {
+    val key = graft.streaming.LocalCheckpointFileManager.ConfKey
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, cls)
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** Hadoop checksum sidecars (`.<name>.crc`) under `dir`; Spark's own
+    * state-file checksums (`<name>.crc`) are data, written by either. */
+  private def crcCount(dir: String): Long = {
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try all.map(_.getFileName.toString)
+      .filter(n => n.startsWith(".") && n.endsWith(".crc")).count()
+    finally all.close()
+  }
+
+  Seq(("Spark's default", SparkManager, "graft's", GraftManager),
+      ("graft's", GraftManager, "Spark's default", SparkManager)).foreach {
+    case (fromName, from, toName, to) =>
+      test(s"kill-count state written by $fromName manager resumes under $toName") {
+        implicit val sqlCtx = spark.sqlContext
+        val ck = ckDir()
+        val input = MemoryStream[Ev]
+        val tag = if (from == SparkManager) "s2g" else "g2s"
+        def start(name: String) =
+          EventStream.killCounts(eventsDF(input))
+            .writeStream.outputMode(OutputMode.Complete)
+            .option("checkpointLocation", ck)
+            .format("memory").queryName(name).start()
+        val firstHalf = Seq(kill(1, 1, 5), kill(2, 1, 5), kill(3, 1, 5), kill(4, 2, 7))
+        val secondHalf = Seq(kill(5, 1, 5), kill(6, 2, 7), kill(7, 3, 9))
+
+        withManager(from) {
+          val q1 = start(s"mgr_kills_${tag}_1")
+          input.addData(firstHalf: _*)
+          q1.processAllAvailable()
+          q1.stop()
+        }
+        // the old files carry sidecars exactly when Spark's manager wrote them
+        assert((crcCount(ck) > 0) === (from == SparkManager), s"crc files: ${crcCount(ck)}")
+
+        input.addData(secondHalf: _*)
+        val after = withManager(to) {
+          val q2 = start(s"mgr_kills_${tag}_2")
+          q2.processAllAvailable()
+          q2.stop()
+          spark.table(s"mgr_kills_${tag}_2").collect().toSet
+        }
+        val whole = EventStream.killCounts(
+          (firstHalf ++ secondHalf).toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
+          .collect().toSet
+        assert(after === whole)
+      }
+  }
+
   // update-mode emissions land in a driver-side buffer via foreachBatch:
   // the memory sink refuses checkpoint recovery outside Complete mode,
   // and foreachBatch is exactly the recoverable sink shape a real
