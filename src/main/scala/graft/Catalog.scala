@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One named engine query: the Spark implementation plus (where SQL-expressible)
   * an equivalent ANSI-SQL oracle the driver runs in DuckDB over the same parquet
@@ -61,7 +62,29 @@ final case class GQuery(
   }
 }
 
-/** Loaders for the driver testbed (TESTDATA.md). One parquet file per table. */
+/** Loaders for the driver testbed (TESTDATA.md). One parquet file per table.
+  *
+  * Every load reads with an explicit schema that [[schemaOf]] resolved
+  * once. A parquet read given no schema infers one on each call, and
+  * parquet inference is a Spark job plus its driver-side closure cleaning
+  * and scheduling, 60–85 ms of wall per read at sf0.01 on a 4-core box:
+  * at that scale it would be the first job of nearly every query, and a
+  * three-table join would pay it three times. The resolver keys a
+  * table's schema by
+  *  - its path — the memo evicts per key directory, and a key per table
+  *    keeps one dataset's ten tables from evicting each other;
+  *  - its [[DatasetFingerprint]] — an in-place rewrite (`Audit layout`
+  *    checks exactly that) re-resolves;
+  *  - the session's explicitly set `spark.sql.parquet.*` and
+  *    `spark.sql.legacy.parquet.*` values, which change what inference
+  *    returns: [[events]]' `nanosAsLong` switch, `binaryAsString`,
+  *    `Audit mode`'s row-reader axis.
+  * It keeps [[DatasetMemo]]'s policy: resolve outside any lock (concurrent
+  * first reads both infer, the first insert wins), and on insert evict the
+  * superseded fingerprints of the same table and every entry of a stopped
+  * application. A path whose walk finds no file (missing, empty, a URI
+  * or a glob) is inferred on every call and never cached.
+  */
 object Tables {
 
   /** Opt-in task-retry fault injection (see `graft.tools.Audit retry`).
@@ -114,8 +137,30 @@ object Tables {
   private def injectRetryFault(df: DataFrame): DataFrame =
     retryFaultBarrier(df)
 
+  private val schemas = new DatasetMemo[StructType]()
+
+  /** The explicitly set session confs that parquet inference reads. */
+  private def inferenceConfs(spark: SparkSession): String =
+    spark.conf.getAll.toSeq
+      .filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") }
+      .sorted.mkString(",")
+
+  /** The schema Spark infers for the parquet data at `path`, resolved once
+    * per (path, fingerprint, inference confs). Also the stream seam's
+    * footer probe ([[graft.streaming.EventStream.readEvents]]). */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    def infer = spark.read.parquet(path).schema
+    DatasetFingerprint.ofFiles(path) match {
+      case Some(fp) => schemas.at(spark, path, fp, inferenceConfs(spark))(_ => infer)
+      case None     => infer
+    }
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (spark.conf.get(RetryFaultKey, "false") == "true") injectRetryFault(df)
     else df
   }

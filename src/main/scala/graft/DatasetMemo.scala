@@ -55,9 +55,15 @@ final class DatasetMemo[V](
   /** [[get]] whose build receives the artifact key (fingerprint ++
     * variant) — for a holder that persists its own later growth. */
   def keyed(spark: org.apache.spark.sql.SparkSession, dir: String,
-            table: String, variant: String)(build: String => V): V = {
+            table: String, variant: String)(build: String => V): V =
+    at(spark, dir, DatasetFingerprint.of(dir, table), variant)(build)
+
+  /** [[keyed]] for a caller that has already walked the data and holds
+    * its fingerprint: the same key, build and eviction, no second walk. */
+  private[graft] def at(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, fingerprint: String, variant: String)(
+                        build: String => V): V = {
     val app = spark.sparkContext.applicationId
-    val fingerprint = DatasetFingerprint.of(dir, table)
     val key = (app, dir, fingerprint, variant)
     synchronized(entries.get(key)) match {
       case Some(v) => v

@@ -178,9 +178,12 @@ object EventStream {
         // only the path-empty/unable-to-infer case falls back to the
         // declared schema (a stream may start before its producer);
         // genuine IO/corruption errors must surface, not be masked as a
-        // silent schema downgrade
+        // silent schema downgrade. The footer schema comes from the batch
+        // tables' resolver, keyed by the directory's fingerprint: a restart
+        // over unchanged files runs no inference job, and the fallback is
+        // never cached
         val footerTs =
-          try spark.read.parquet(cfg.path.get).schema.find(_.name == "ts")
+          try graft.Tables.schemaOf(spark, cfg.path.get).find(_.name == "ts")
           catch {
             case _: org.apache.spark.sql.AnalysisException => None
           }

@@ -78,6 +78,28 @@ class SessionSpec extends SparkSuite {
       .filterNot(f => f == "graft/Materialize.scala" || f.startsWith("graft/tools/"))
     assert(offenders === Seq(), "stage through graft.Materialize instead")
   }
+
+  test("only the schema resolver and a named allowlist read parquet without a schema") {
+    // a reader chain from `.read` to `.parquet(`, across lines; a read
+    // whose chain carries `.schema(` skips inference and passes
+    val read = """(?s)\.read((?:\s*\.(?!parquet\()\w+\((?:[^()]|\([^()]*\))*\))*)\s*\.parquet\(""".r
+    def bareReads(src: String): Int =
+      read.findAllMatchIn(src).count(!_.group(1).contains(".schema("))
+    // file -> the inferring reads it may keep; tools/ is exempt
+    val allowed = Map(
+      "graft/Catalog.scala" -> 1,              // Tables.schemaOf: the resolver
+      "graft/operators/EventOps.scala" -> 1,   // schema_evolution's mergeSchema read tests inference
+      "graft/ArtifactStore.scala" -> 2,        // artifact loads
+      "graft/operators/KMeansOps.scala" -> 1,  // artifact load
+      "graft/operators/ArchiveOps.scala" -> 1, // readArchive
+      "graft/Verify.scala" -> 1)               // counts its own dumped output
+    val counts = sourcesMatching(bareReads(_) > 0)
+      .filterNot(_.startsWith("graft/tools/"))
+      .map(f => f -> bareReads(Files.readString(Paths.get("src/main/scala", f))))
+    val offenders = counts.filter { case (f, n) => n > allowed.getOrElse(f, 0) }
+    assert(offenders === Seq(), "read tables through graft.Tables, or pass .schema")
+    assert(counts.toMap === allowed, "the allowlist names a read that is gone")
+  }
 }
 
 /** Child-JVM half of SessionSpec's memo case: run kmeans_centroids (its
