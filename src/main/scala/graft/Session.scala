@@ -3,6 +3,9 @@ package graft
 import java.io.File
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.SQLConf
 
 /** The one local-session recipe behind every graft main and the test
   * suite: `local[workers]` with as many shuffle partitions, UTC session
@@ -12,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   * (GameEventsSource aggregates shuffle-free), streaming checkpoints
   * written by [[streaming.LocalCheckpointFileManager]] (Spark's default
   * manager forks `readlink`/`chmod` per checkpoint file on a local path),
-  * and the graft_* native functions installed once.
+  * and graft's optimizer rules and graft_* native functions installed once
+  * ([[functions.GraftExtensions]], so `join_range_bucketed`'s naive range
+  * join gets its bucketed plan).
   *
   * Per-tool confs go through `conf` and win over the recipe. Tools whose
   * output or gate depends on a fixed worker count pass `workers`
@@ -37,6 +42,7 @@ object Session {
             conf: Map[String, String] = Map.empty,
             logLevel: String = "WARN"): SparkSession = {
     val builder = SparkSession.builder()
+      .withExtensions(new functions.GraftExtensions)
       .master(s"local[$workers]")
       .config("spark.sql.shuffle.partitions", workers.toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -62,6 +68,18 @@ object Session {
     functions.QuantileSketchAggregate.ensureRegistered(spark)
     functions.KmvSketchAggregate.ensureRegistered(spark)
     functions.FlameRayGenerator.ensureRegistered(spark)
+  }
+
+  /** Run `body` with `rule` excluded from `spark`'s optimizer, then restore
+    * the exclusion list: the rule-free baseline a rewrite is compared with.
+    * Plans are optimized lazily, so `body` must plan (and run) its frames
+    * itself. */
+  def withoutRule[T](spark: SparkSession, rule: Rule[LogicalPlan])(body: => T): T = {
+    val key = SQLConf.OPTIMIZER_EXCLUDED_RULES.key
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, (prior.toSeq :+ rule.ruleName).mkString(","))
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Temp dirs [[shareCheckpoints]] created, deleted by [[stop]]. */

@@ -795,11 +795,12 @@ object RewriteDotProduct
     }
 }
 
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` injects the
-  * native functions and the HOF-rewrite rule into every session of a
-  * cluster deployment. For an existing session, use
-  * `spark.experimental.extraOptimizations :+= RewriteDotProduct` plus
-  * [[VectorExpressions.ensureRegistered]].
+/** Injects the native vector functions and graft's optimizer rules
+  * (the dot-product and range-join rewrites, and the opt-in approximate
+  * distinct) into a session's function registry and operator-optimization
+  * batch. [[graft.Session.local]] installs it with `withExtensions`; a
+  * cluster deployment passes
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -811,7 +812,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectOptimizerRule(_ => graft.plans.RewriteRangeJoin)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteOverlapJoin)
     ext.injectOptimizerRule(_ => graft.plans.RewriteApproxDistinct)
   }
 }

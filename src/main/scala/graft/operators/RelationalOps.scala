@@ -339,42 +339,32 @@ object RelationalOps {
         |       round(quantile_cont(${finiteOrNull("l_extendedprice")}, 0.99), 4) AS p99_price
         |FROM lineitem GROUP BY l_returnflag""".stripMargin))
 
-  /** Range-join bucket width in µs (24 h) — equal to the interval length so
+  /** Attribution lookback in µs (24 h): the range join's window, which
+    * [[graft.plans.RewriteRangeJoin]] also takes as its bucket width, so
     * every probe interval spans at most 2 buckets.
     */
   final val RangeBucketUs = 86400000000L
 
-  /** Big×big point-in-interval join, bucketized — the scale technique for
-    * range joins Spark has no native optimization for: a naive
-    * `a JOIN b ON b.ts BETWEEN a.ts - W AND a.ts` plans as
-    * BroadcastNestedLoopJoin (quadratic per user at 100 TB). Instead both
-    * sides get an equi-joinable time-bucket key of width W: the build side
-    * keeps its own bucket, the probe side expands to the only 2 buckets its
-    * interval can touch (bucket width = interval length), the join runs as a
-    * plain shuffled hash join on (user_id, bucket), and the exact range
-    * predicate filters the ≤2× candidate fan-out. Per-pair uniqueness is
-    * structural — each build row carries exactly one bucket. The query:
-    * for every purchase, how many clicks by the same user in the preceding
-    * 24 h (attribution lookback).
+  /** For every probe (event_id, user_id, tu), how many build rows
+    * (user_id, btu) of the same user fall in the preceding
+    * [[RangeBucketUs]]: the naive inner range join, counted per probe and
+    * left-joined back so probes without a match count 0. Spark has no
+    * native plan for the non-equi time predicate (alone it is a
+    * post-filter on the user_id join, quadratic per hot user);
+    * [[graft.plans.RewriteRangeJoin]], which every `Session.local` session
+    * runs, turns the join into a shuffled equi-join on (user_id, bucket)
+    * with the range conjuncts as its exact filter. Shared by the
+    * registered query and the scale smoke.
     */
-  /** The bucketized core, reusable on any (event_id, user_id, tu) probe
-    * frame × (user_id, btu) build frame — shared by the registered query
-    * and the scale smoke. Returns one row per probe with its in-window
-    * build count.
-    */
-  private[graft] def recentCountBucketed(
-      probesIn: org.apache.spark.sql.DataFrame,
-      buildIn: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val build = buildIn.select(col("user_id"), col("btu"),
-      expr(s"btu div $RangeBucketUs").as("bkt"))
-    val probes = probesIn.select(col("event_id"), col("user_id"), col("tu"),
-      explode(array(expr(s"tu div $RangeBucketUs"),
-        expr(s"tu div $RangeBucketUs - 1"))).as("bkt"))
-    val matched = probes.join(build, Seq("user_id", "bkt"))
-      .filter(col("btu") >= col("tu") - RangeBucketUs && col("btu") < col("tu"))
-      .groupBy("event_id").agg(count(lit(1)).as("n_recent_clicks"))
-    probesIn.join(matched, Seq("event_id"), "left")
+  private[graft] def recentCount(
+      probes: DataFrame, build: DataFrame): DataFrame = {
+    val matched = probes.as("a").join(build.as("b"),
+        col("b.user_id") === col("a.user_id") &&
+          col("b.btu") >= col("a.tu") - RangeBucketUs &&
+          col("b.btu") < col("a.tu"))
+      .groupBy(col("a.event_id").as("event_id"))
+      .agg(count(lit(1)).as("n_recent_clicks"))
+    probes.join(matched, Seq("event_id"), "left")
       .select(col("event_id"),
         coalesce(col("n_recent_clicks"), lit(0L)).as("n_recent_clicks"))
   }
@@ -389,7 +379,7 @@ object RelationalOps {
         .select(col("event_id"), col("user_id"), col("tu"))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("tu").as("btu"))
-      recentCountBucketed(purchases, clicks)
+      recentCount(purchases, clicks)
     },
     oracle = Some(
       s"""WITH rj_a AS (
@@ -410,7 +400,7 @@ object RelationalOps {
   final val OverlapBucketDays = 50L
 
   /** Interval×interval OVERLAP join, bucketized — the generalization of
-    * [[recentCountBucketed]] from point-in-interval to interval-vs-interval
+    * the range join's bucketing from point-in-interval to interval-vs-interval
     * (`a.s <= b.e AND b.s <= a.e`), which Spark would otherwise plan as a
     * nested-loop per key. Technique: with bucket width B ≥ max interval
     * length, an interval [s, e] covers at most the 2 buckets
@@ -449,15 +439,17 @@ object RelationalOps {
     // co-partitioned shuffled hash join on (key, bkt) is 8× faster warm at
     // sf0.1 and is the only shape that survives 100 TB.
     //
-    // r20 audit note (VERDICT item 6): the "3 exchanges" plan pin
-    // double-counts what executes — the two sides' (key, bkt) exchange
-    // subtrees are CANONICALLY IDENTICAL (the renames sit above the
-    // exchange), so AQE's runtime stage cache computes the shuffle once
-    // and reuses it; a measured self-join-on-one-alias restructure moved
-    // neither wall nor task counts (1.4-1.9 s, 5 jobs, 38 tasks both
-    // ways) and was dropped because RewriteOverlapJoin's
-    // already-bucketized guard does not recognize the aliased shape
-    // (GraftExtensionsSpec pins that guard).
+    // The "3 exchanges" plan pin double-counts what executes: the two
+    // sides' (key, bkt) exchange subtrees are CANONICALLY IDENTICAL (the
+    // renames sit above the exchange), so AQE's runtime stage cache
+    // computes the shuffle once and reuses it; a self-join-on-one-alias
+    // restructure measured no different (1.4-1.9 s, 5 jobs, 38 tasks
+    // both ways).
+    //
+    // Hand-written, not an optimizer rule: a rule's bucket width is a
+    // session conf no query can set for itself, and a generic overlap
+    // matcher cannot tell this query's `id_a < id_b` conjunct from an
+    // interval endpoint.
     a.hint("shuffle_hash").join(b, Seq("key", "bkt"))
       .filter(col("id_a") < col("id_b") &&
         col("s_a") <= col("e_b") && col("s_b") <= col("e_a") &&

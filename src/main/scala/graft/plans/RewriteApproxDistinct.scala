@@ -17,8 +17,7 @@ import graft.functions.KmvSketchAggregate
   * ~1/√(k−2) relative error.
   *
   * DISABLED by default — the rewrite changes RESULTS, so unlike
-  * [[RewriteRangeJoin]]/[[RewriteOverlapJoin]] (plan-shape-only) it
-  * requires explicit consent:
+  * [[RewriteRangeJoin]] (plan-shape-only) it requires explicit consent:
   *
   *   spark.conf.set("spark.graft.approx.distinct.enabled", "true")
   *   spark.conf.set("spark.graft.approx.distinct.k", "64")   // optional

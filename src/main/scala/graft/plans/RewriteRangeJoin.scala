@@ -12,10 +12,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *   probe JOIN build ON probe.k = build.k
   *     AND build.t >= probe.t - W AND build.t < probe.t     -- W literal > 0
   *
-  * into the bucketized equi-join `RelationalOps.joinRangeBucketed`
-  * hand-writes: without an equi time key Spark can only plan the range
-  * conjuncts as a post-filter on the k-join — correct, but one hot k
-  * (or no k at all) degenerates to nested-loop work. The rewrite gives
+  * into a bucketized equi-join: without an equi time key Spark can only
+  * plan the range conjuncts as a post-filter on the k-join — correct, but
+  * one hot k (or no k at all) degenerates to nested-loop work. This rule
+  * is graft's only range-join bucketing: `join_range_bucketed` writes the
+  * naive inner range join, and every [[graft.Session.local]] session runs
+  * the rule (installed by [[graft.functions.GraftExtensions]] inside the
+  * operator-optimization fixpoint). The rewrite gives
   * both sides an equal-width bucket key (bucket START, `t - pmod(t, W)` —
   * floor semantics for any sign of t, no division), explodes the probe to
   * the only two buckets its interval can touch, joins on (k…, bucket),
@@ -45,13 +48,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *    copy-level semi multiplicity — out of scope).
   *
   * Already-bucketized guard: a join that ALREADY carries an equi-conjunct
-  * linking expressions derived from the two time attributes (e.g. the
-  * hand-bucketized `recentCountBucketed`, whose post-join range filter
+  * linking expressions derived from the two time attributes (a
+  * hand-bucketized join, whose post-join range filter
   * PushPredicateThroughJoin folds back into the join condition inside the
   * same fixpoint batch this rule runs in) is left alone — rewriting it
   * would double the probe fan-out (2 manual copies × 2 rule buckets).
-  * Derivation is traced through Project aliases, Filters and Generate
-  * outputs on each side.
+  * Both the equi-conjunct's sides and the time attributes themselves are
+  * traced to their origin columns through Project aliases, Filters and
+  * Generate outputs: a time column aliased in the same Project that
+  * carries the bucket key (`tu := unix_micros(ts)`) otherwise never
+  * matches its traced bucket. The trace is conservative: a join whose
+  * equi key is computed from the same column as its time is left alone
+  * too.
   *
   * Both bounds may be strict or inclusive (an inclusive span of W+1
   * consecutive longs still fits 2 width-W buckets for W ≥ 1); `t`
@@ -115,7 +123,7 @@ object RewriteRangeJoin extends Rule[LogicalPlan] {
     * Generate (the whole generator input counts) — coarseness only makes
     * the already-bucketized guard MORE conservative, never less sound.
     */
-  private[plans] def originRefs(e: Expression, plan: LogicalPlan): AttributeSet = {
+  private def originRefs(e: Expression, plan: LogicalPlan): AttributeSet = {
     def walk(refs: AttributeSet, p: LogicalPlan): AttributeSet = p match {
       case Project(list, child) =>
         val m = list.collect { case a: Alias => a.toAttribute -> a.child.references }
@@ -139,7 +147,10 @@ object RewriteRangeJoin extends Rule[LogicalPlan] {
     */
   private def alreadyBucketized(
       cs: Seq[Expression], probe: LogicalPlan, build: LogicalPlan,
-      pt: AttributeReference, bt: AttributeReference): Boolean =
+      pt: AttributeReference, bt: AttributeReference): Boolean = {
+    val ptO = originRefs(pt, probe)
+    val btO = originRefs(bt, build)
+    def derived(refs: AttributeSet, from: AttributeSet) = refs.exists(from.contains)
     cs.exists {
       case EqualTo(l, r) =>
         def sideRefs(e: Expression): Option[AttributeSet] =
@@ -148,12 +159,13 @@ object RewriteRangeJoin extends Rule[LogicalPlan] {
           else None
         (sideRefs(l), sideRefs(r)) match {
           case (Some(lr), Some(rr)) =>
-            (lr.contains(pt) && rr.contains(bt)) ||
-              (lr.contains(bt) && rr.contains(pt))
+            (derived(lr, ptO) && derived(rr, btO)) ||
+              (derived(lr, btO) && derived(rr, ptO))
           case _ => false
         }
       case _ => false
     }
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case j @ Join(left, right, jt, Some(cond), hint)

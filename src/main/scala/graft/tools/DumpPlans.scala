@@ -32,7 +32,7 @@ object DumpPlans {
       "sample_stratified" -> "stratified sample: fused partial_cosinetopkaggregate below the exchange — k rows per stratum cross the shuffle, no stratum-wide window sort",
       "pack_sequences" -> "sequence packing: ONE shuffle on (source, shard) then an in-partition running-sum window — shard key bounds every partition to ~1/8 of a source at any corpus size",
       "dedup_span_boilerplate" -> "span boilerplate removal: row-local span generation, one df shuffle, heavy-hitter set broadcast into a left-anti join, one doc_id shuffle for reassembly — no span×span join",
-      "join_range_bucketed" -> "bucketized range join: both sides equi-keyed on (user_id, bucket) → shuffled hash join + exact range filter — no BroadcastNestedLoopJoin for the non-equi time predicate",
+      "join_range_bucketed" -> "naive range join, bucketed by RewriteRangeJoin: probes explode to their 2 candidate buckets, both sides equi-keyed on (user_id, bucket) → shuffled hash join + exact range filter — no BroadcastNestedLoopJoin for the non-equi time predicate",
       "decontam_bloom" -> "bloom-prefiltered decontam: corpus probe is xxhash64+shift/mask against one array<long> literal inside whole-stage codegen; exact broadcast join sees only bloom survivors",
       "funnel_stages" -> "ordered funnel: per-stage min-entry aggregates joined co-keyed on user_id — each stage reuses the partitioning its own groupBy produced, no window over an unbounded partition",
       "cohort_retention" -> "cohort matrix: (user, day) distinct → first-day agg → co-keyed join → plain count — the distinct turns count-distinct cells into count(*)",

@@ -1,14 +1,18 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Range-join scale smoke: run the bucketized point-in-interval join
-  * (RelationalOps.recentCountBucketed) over a synthetic event stream
-  * orders of magnitude bigger than the testbed, assert the plan never
-  * degrades to a nested loop, and cross-check correctness against the
-  * naive non-equi join on a subsample (the naive plan is the quadratic
-  * baseline the operator exists to avoid — running it at full N is the
-  * failure mode, so it only sees the subsample).
+import graft.operators.RelationalOps
+
+/** Range-join scale smoke: run `join_range_bucketed`'s naive range join
+  * (RelationalOps.recentCount) over a synthetic event stream orders of
+  * magnitude bigger than the testbed, assert that the session's
+  * RewriteRangeJoin bucketed it and that the plan never degrades to a
+  * nested loop, and cross-check correctness against a LEFT range join
+  * planned without the rule on a subsample (the rule-free plan is the
+  * quadratic baseline the rule exists to avoid — running it at full N is
+  * the failure mode, so it only sees the subsample).
   *
   *   N_EVENTS=2000000 N_USERS=10000 sbt "runMain graft.tools.RangeJoinSmoke"
   *
@@ -35,8 +39,10 @@ object RangeJoinSmoke {
     val build = events.filter(!col("is_probe"))
       .select(col("user_id"), col("tu").as("btu"))
 
-    val bucketized =
-      graft.operators.RelationalOps.recentCountBucketed(probes, build)
+    val bucketized = RelationalOps.recentCount(probes, build)
+    val optimized = bucketized.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("__graft_range"),
+      s"the range rule did not bucket the join:\n$optimized")
     val physical = bucketized.queryExecution.executedPlan.toString
     assert(!physical.contains("NestedLoop"),
       s"bucketized range join degraded to a nested loop:\n$physical")
@@ -49,21 +55,26 @@ object RangeJoinSmoke {
 
     // correctness parity on a deterministic ~50k-event subsample
     // (stride floored at 1 so a small N_EVENTS run keeps every probe
-    // instead of dividing by zero)
+    // instead of dividing by zero); each side is planned and collected
+    // on its own, since one plan holding both would run the rule on both
+    def rows(df: DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val sProbes = probes.filter(
       pmod(col("event_id"), lit(math.max(1L, n / 50000L))) === 0)
-    val sBuild = build
-    val sBucketized =
-      graft.operators.RelationalOps.recentCountBucketed(sProbes, sBuild)
-    val sNaive = sProbes.alias("a")
-      .join(sBuild.alias("b"),
-        col("b.user_id") === col("a.user_id") &&
-          col("btu") >= col("tu") - graft.operators.RelationalOps.RangeBucketUs &&
-          col("btu") < col("tu"), "left")
-      .groupBy(col("a.event_id").as("event_id"))
-      .agg(count(col("btu")).as("n_recent_clicks"))
-    val diff = sBucketized.except(sNaive).count() +
-      sNaive.except(sBucketized).count()
+    val sBucketized = rows(RelationalOps.recentCount(sProbes, build))
+    val sNaive = graft.Session.withoutRule(spark, graft.plans.RewriteRangeJoin) {
+      val naive = sProbes.alias("a")
+        .join(build.alias("b"),
+          col("b.user_id") === col("a.user_id") &&
+            col("btu") >= col("tu") - RelationalOps.RangeBucketUs &&
+            col("btu") < col("tu"), "left")
+        .groupBy(col("a.event_id").as("event_id"))
+        .agg(count(col("btu")).as("n_recent_clicks"))
+      val plan = naive.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("__graft_"), s"the baseline was rewritten:\n$plan")
+      rows(naive)
+    }
+    val diff = sBucketized.diff(sNaive).size + sNaive.diff(sBucketized).size
 
     println(f"RANGEJOIN events=$n%d users=$users%d " +
       f"probes=${total.getLong(0)}%d matches=${total.getLong(1)}%d " +

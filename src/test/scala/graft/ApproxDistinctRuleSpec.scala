@@ -12,24 +12,14 @@ import graft.plans.RewriteApproxDistinct
   */
 class ApproxDistinctRuleSpec extends SparkSuite {
 
-  private def withExtSession[T](body: SparkSession => T): T = {
-    val orig = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    try body(s2)
+  /** The shared session, which `Session.local` built with the
+    * extensions; the rule's confs are cleared after each case. */
+  private def onSession[T](body: SparkSession => T): T =
+    try body(spark)
     finally {
-      s2.conf.unset(RewriteApproxDistinct.EnabledKey)
-      s2.conf.unset(RewriteApproxDistinct.KKey)
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setActiveSession(orig)
-      SparkSession.setDefaultSession(orig)
+      spark.conf.unset(RewriteApproxDistinct.EnabledKey)
+      spark.conf.unset(RewriteApproxDistinct.KKey)
     }
-  }
 
   private def data(s: SparkSession) = {
     import s.implicits._
@@ -42,7 +32,7 @@ class ApproxDistinctRuleSpec extends SparkSuite {
   }
 
   test("disabled by default: plan and results stay exact") {
-    withExtSession { s2 =>
+    onSession { s2 =>
       val q = data(s2).groupBy("g").agg(countDistinct("uid").as("nd"))
       assert(!q.queryExecution.optimizedPlan.toString
         .toLowerCase.contains("kmvsketch"))
@@ -52,7 +42,7 @@ class ApproxDistinctRuleSpec extends SparkSuite {
   }
 
   test("enabled: rewrite fires; exact below k, estimator-accurate above") {
-    withExtSession { s2 =>
+    onSession { s2 =>
       s2.conf.set(RewriteApproxDistinct.EnabledKey, "true")
       val q = data(s2).groupBy("g").agg(countDistinct("uid").as("nd"))
       val opt = q.queryExecution.optimizedPlan.toString.toLowerCase
@@ -67,7 +57,7 @@ class ApproxDistinctRuleSpec extends SparkSuite {
   }
 
   test("k conf: larger sketch widens the exact regime") {
-    withExtSession { s2 =>
+    onSession { s2 =>
       import s2.implicits._
       s2.conf.set(RewriteApproxDistinct.EnabledKey, "true")
       s2.conf.set(RewriteApproxDistinct.KKey, "8192")
@@ -79,7 +69,7 @@ class ApproxDistinctRuleSpec extends SparkSuite {
   }
 
   test("ids a modulus apart do not collide (the pre-mod-prime hazard)") {
-    withExtSession { s2 =>
+    onSession { s2 =>
       import s2.implicits._
       s2.conf.set(RewriteApproxDistinct.EnabledKey, "true")
       // under a ((x % 1000003) * C) % 2^32 hash these two hash identically
@@ -91,7 +81,7 @@ class ApproxDistinctRuleSpec extends SparkSuite {
   }
 
   test("nulls are ignored, matching exact count(distinct) semantics") {
-    withExtSession { s2 =>
+    onSession { s2 =>
       import s2.implicits._
       s2.conf.set(RewriteApproxDistinct.EnabledKey, "true")
       val df = Seq[(String, java.lang.Long)](
@@ -104,7 +94,7 @@ class ApproxDistinctRuleSpec extends SparkSuite {
   }
 
   test("scope: string distincts and filtered counts stay exact") {
-    withExtSession { s2 =>
+    onSession { s2 =>
       import s2.implicits._
       s2.conf.set(RewriteApproxDistinct.EnabledKey, "true")
       val df = (1 to 1000).map(i => (s"s${i % 30}", (i % 30).toLong))

@@ -1,49 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.RelationalOps
+import graft.plans.RewriteRangeJoin
 
-/** The PRODUCTION registration path: a session built with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` places the
-  * optimizer rules inside the operator-optimization FIXPOINT batch,
-  * interleaved with PushPredicateThroughJoin / ColumnPruning /
-  * ConstantFolding — a different execution regime than the test harness's
-  * `spark.experimental.extraOptimizations` (a post-optimization batch).
-  * These cases re-assert rewrite firing, result parity, the non-rewrite
-  * scope, and — the interleaving-specific hazard — that the hand-
-  * bucketized `join_range_bucketed` core is NOT re-bucketized after
-  * pushdown folds its range filter back into the join condition.
+/** The PRODUCTION registration path: `Session.local` installs
+  * `graft.functions.GraftExtensions`, which places the optimizer rules
+  * inside the operator-optimization FIXPOINT batch, interleaved with
+  * PushPredicateThroughJoin / ColumnPruning / ConstantFolding. These cases
+  * run on the shared session and re-assert rewrite firing, result parity
+  * against the same join planned without the rule, the non-rewrite scope,
+  * and — the interleaving-specific hazard — that a hand-bucketized range
+  * join is NOT re-bucketized after pushdown folds its range filter back
+  * into the join condition.
   */
 class GraftExtensionsSpec extends SparkSuite {
 
   private val W = 1000L
 
-  private def withExtSession[T](body: SparkSession => T): T = {
-    val orig = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // reuses orig's SparkContext. withExtensions, not the
-    // spark.sql.extensions conf: that conf is STATIC (read from the
-    // SparkContext at ITS creation, which the shared test context
-    // predates) — withExtensions drives the identical injection calls
-    // (injectOptimizerRule → operator-optimization fixpoint batch), which
-    // is the wiring under test
-    val s2 = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    try body(s2)
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setActiveSession(orig)
-      SparkSession.setDefaultSession(orig)
-    }
-  }
-
-  private def frames(s: SparkSession) = {
-    import s.implicits._
+  private def frames = {
+    import spark.implicits._
     val probes = (0L until 400L).map(i => (i, i % 17, (i * 7919) % 50000))
       .toDF("event_id", "k", "tu")
     val build = (0L until 2000L).map(i => ((i * 104729) % 13, (i * 31) % 50000))
@@ -51,142 +27,79 @@ class GraftExtensionsSpec extends SparkSuite {
     (probes, build)
   }
 
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private def naiveRows(df: => DataFrame): Seq[String] =
+    ruleFree(RewriteRangeJoin)(df).map(_.toString).sorted.toSeq
+
   test("naive inner range join rewrites and matches under real wiring") {
-    val (p0, b0) = frames(spark)
-    val baseline = p0.as("a").join(b0.as("b"),
+    val (p, b) = frames
+    def q = p.as("a").join(b.as("b"),
         col("b.k") === col("a.k") &&
           col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"))
       .select(col("a.event_id"), col("b.btu"))
-      .collect().map(_.toString).sorted.toSeq
+    val baseline = naiveRows(q)
     assert(baseline.nonEmpty)
-    withExtSession { s2 =>
-      val (p, b) = frames(s2)
-      def q = p.as("a").join(b.as("b"),
-          col("b.k") === col("a.k") &&
-            col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"))
-        .select(col("a.event_id"), col("b.btu"))
-      assert(q.queryExecution.optimizedPlan.toString.contains("__graft_range"),
-        "rule did not fire under spark.sql.extensions wiring")
-      assert(q.collect().map(_.toString).sorted.toSeq === baseline)
-    }
+    assert(q.queryExecution.optimizedPlan.toString.contains("__graft_range"),
+      "rule did not fire under the session's extension wiring")
+    assert(rows(q) === baseline)
   }
 
   test("probe-preserved left outer rewrites and matches under real wiring") {
-    val (p0, b0) = frames(spark)
-    def mk(p: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      p.as("a").join(b.as("b"),
+    val (p, b) = frames
+    def q = p.as("a").join(b.as("b"),
         col("b.k") === col("a.k") &&
           col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"), "left")
-        .select(col("a.event_id"), col("b.btu"))
-    val baseline = mk(p0, b0).collect().map(_.toString).sorted.toSeq
+      .select(col("a.event_id"), col("b.btu"))
+    val baseline = naiveRows(q)
     assert(baseline.exists(_.contains("null")))
-    withExtSession { s2 =>
-      val (p, b) = frames(s2)
-      assert(mk(p, b).queryExecution.optimizedPlan.toString
-        .contains("__graft_range_rid"))
-      assert(mk(p, b).collect().map(_.toString).sorted.toSeq === baseline)
-    }
+    assert(q.queryExecution.optimizedPlan.toString.contains("__graft_range_rid"))
+    assert(rows(q) === baseline)
   }
 
   test("hand-bucketized range core is not re-bucketized by the fixpoint") {
-    // the exact interleaving hazard: PushPredicateThroughJoin folds
-    // recentCountBucketed's post-join range filter into the join condition
-    // mid-fixpoint, which then pattern-matches the rule
-    def cnt(s: SparkSession) = {
-      import s.implicits._
-      val probes = (0L until 300L).map(i => (i, i % 7, (i * 7919) % 50000))
-        .toDF("event_id", "user_id", "tu")
-      val build = (0L until 1500L).map(i => ((i * 104729) % 7, (i * 31) % 50000))
-        .toDF("user_id", "btu")
-      RelationalOps.recentCountBucketed(probes.repartition(2), build.repartition(2))
-    }
-    val baseline = cnt(spark).collect().map(_.toString).sorted.toSeq
-    withExtSession { s2 =>
-      val q = cnt(s2)
-      assert(!q.queryExecution.optimizedPlan.toString.contains("__graft_range"),
-        "hand-bucketized core was re-bucketized under the fixpoint batch")
-      assert(q.collect().map(_.toString).sorted.toSeq === baseline)
-    }
-  }
-
-  test("overlap rewrite fires and matches under real wiring; hand query untouched") {
-    def iv(s: SparkSession) = {
-      import s.implicits._
-      (1 to 250).map { i =>
-        val st = (i * 7919) % 2000
-        (i % 4, i.toLong, st.toLong, (st + (i * 31) % 120).toLong)
-      }.toDF("k", "id", "s", "e")
-    }
-    val baseline = iv(spark).as("a").join(iv(spark).as("b"),
-        col("a.k") === col("b.k") &&
-          col("a.s") <= col("b.e") && col("b.s") <= col("a.e"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .collect().map(_.toString).sorted.toSeq
+    // the exact interleaving hazard: PushPredicateThroughJoin folds the
+    // post-join range filter into the join condition mid-fixpoint, which
+    // then pattern-matches the rule. The time columns are aliased in the
+    // Project that also carries each side's bucket key, as a query over
+    // event timestamps writes them (tu := unix_micros(ts)); repartition()
+    // keeps the local frames from folding those Projects into the
+    // LocalRelation
+    import spark.implicits._
+    def stamped(df: DataFrame) = df.withColumn("ts", timestamp_micros(col("t")))
+      .drop("t").repartition(2)
+    def probes = stamped((0L until 300L).map(i => (i, i % 7, (i * 7919) % 50000))
+      .toDF("event_id", "user_id", "t"))
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("tu"))
+    def build = stamped((0L until 1500L).map(i => ((i * 104729) % 7, (i * 31) % 50000))
+      .toDF("user_id", "t"))
+      .select(col("user_id"), unix_micros(col("ts")).as("btu"))
+    def inRange = col("btu") >= col("tu") - W && col("btu") < col("tu")
+    def hand = probes
+      .withColumn("bkt", explode(array(expr(s"tu div $W"), expr(s"tu div $W - 1"))))
+      .join(build.withColumn("bkt", expr(s"btu div $W")), Seq("user_id", "bkt"))
+      .filter(inRange)
+      .groupBy("event_id").agg(count(lit(1)).as("n"))
+    val baseline = naiveRows(hand)
     assert(baseline.nonEmpty)
-    withExtSession { s2 =>
-      s2.conf.set(graft.plans.RewriteOverlapJoin.WidthKey, "100")
-      def q = iv(s2).as("a").join(iv(s2).as("b"),
-          col("a.k") === col("b.k") &&
-            col("a.s") <= col("b.e") && col("b.s") <= col("a.e"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      assert(q.queryExecution.optimizedPlan.toString.contains("__graft_overlap"),
-        "overlap rule did not fire under real wiring")
-      assert(q.collect().map(_.toString).sorted.toSeq === baseline)
-      // the hand-bucketized registered query survives the fixpoint
-      // interleaving (pushdown folds its filter into the join) un-rewritten
-      val hand = RelationalOps.joinIntervalOverlap.run(s2, smokeDir)
-      assert(!hand.queryExecution.optimizedPlan.toString
-        .contains("__graft_overlap"),
-        "hand-bucketized overlap core was re-bucketized under the fixpoint")
-    }
-  }
-
-  test("outer overlap rewrite matches under real wiring (NullPropagation runs)") {
-    // sparse keys + ~5% null endpoints: unmatched-row null extension and
-    // the IsNotNull-over-join-output subtlety only surface when the rule
-    // runs INSIDE the operator-optimization fixpoint (the range rule's
-    // outer dedup was constant-folded to `true` there — this pins the
-    // overlap rule against the same failure)
-    def iv(s: SparkSession, seed: Int, n: Int) = {
-      import s.implicits._
-      val r = new scala.util.Random(seed)
-      (1 to n).map { i =>
-        val st = r.nextInt(3000).toLong
-        (r.nextInt(30).toLong, i.toLong,
-          if (r.nextInt(20) == 0) null else java.lang.Long.valueOf(st),
-          if (r.nextInt(20) == 0) null
-          else java.lang.Long.valueOf(st + r.nextInt(40)))
-      }.toDF("k", "id", "s", "e")
-    }
-    def q(s: SparkSession) = iv(s, 21, 250).as("a").join(
-      iv(s, 22, 50).as("b"),
-      col("a.k") === col("b.k") &&
-        col("a.s") <= col("b.e") && col("b.s") <= col("a.e"),
-      "left")
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val baseline = q(spark).collect().map(_.toString).sorted.toSeq
-    assert(baseline.exists(_.contains("null")),
-      "geometry must produce unmatched left rows")
-    withExtSession { s2 =>
-      s2.conf.set(graft.plans.RewriteOverlapJoin.WidthKey, "32")
-      val optimized = q(s2).queryExecution.optimizedPlan.toString
-      assert(optimized.contains("__graft_overlap"),
-        s"outer overlap rule did not fire under real wiring:\n$optimized")
-      assert(q(s2).collect().map(_.toString).sorted.toSeq === baseline)
-    }
+    assert(!hand.queryExecution.optimizedPlan.toString.contains("__graft_range"),
+      "hand-bucketized core was re-bucketized under the fixpoint batch")
+    assert(rows(hand) === baseline)
+    // the same frames joined naively are rewritten: the rule is live here
+    val naive = probes.join(build, Seq("user_id")).filter(inRange)
+    assert(naive.queryExecution.optimizedPlan.toString.contains("__graft_range"))
   }
 
   test("scope cases hold under real wiring: equi-only and full outer") {
-    withExtSession { s2 =>
-      val (p, b) = frames(s2)
-      val equiOnly = p.as("a").join(b.as("b"), col("b.k") === col("a.k"))
-      assert(!equiOnly.queryExecution.optimizedPlan.toString
-        .contains("__graft_range"))
-      val full = p.as("a").join(b.as("b"),
-        col("b.k") === col("a.k") &&
-          col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"), "full")
-      assert(!full.queryExecution.optimizedPlan.toString
-        .contains("__graft_range"))
-    }
+    val (p, b) = frames
+    val equiOnly = p.as("a").join(b.as("b"), col("b.k") === col("a.k"))
+    assert(!equiOnly.queryExecution.optimizedPlan.toString
+      .contains("__graft_range"))
+    val full = p.as("a").join(b.as("b"),
+      col("b.k") === col("a.k") &&
+        col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"), "full")
+    assert(!full.queryExecution.optimizedPlan.toString
+      .contains("__graft_range"))
   }
 }

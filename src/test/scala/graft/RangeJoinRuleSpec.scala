@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.plans.RewriteRangeJoin
 
-/** The range-join rewrite rule: the naive non-equi form users write gets
-  * the bucketized plan, result-identically; shapes outside the sound
-  * scope (outer joins, no range bounds) are left alone.
+/** The range-join rewrite rule, as the shared session runs it: the naive
+  * non-equi form users write gets the bucketized plan, with the same rows
+  * as the same join planned without the rule; shapes outside the sound
+  * scope (full outer joins, no range bounds) are left alone.
   */
 class RangeJoinRuleSpec extends SparkSuite {
 
@@ -28,30 +29,24 @@ class RangeJoinRuleSpec extends SparkSuite {
       col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"))
     .select(col("a.event_id"), col("b.btu"))
 
-  private def withRule[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RewriteRangeJoin
-    try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RewriteRangeJoin)
-  }
-
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** `df`'s rows planned without the rule: the naive plan's result. */
+  private def naiveRows(df: => org.apache.spark.sql.DataFrame): Seq[String] =
+    ruleFree(RewriteRangeJoin)(df).map(_.toString).sorted.toSeq
+
   test("naive inner range join gets the bucketized plan, same result") {
-    val baseline = rows(naive)
+    val baseline = naiveRows(naive)
     assert(baseline.nonEmpty, "test geometry must produce matches")
-    withRule {
-      val optimized = naive.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("__graft_range_bkt"),
-        s"rewrite did not fire:\n$optimized")
-      val physical = naive.queryExecution.executedPlan.toString
-      assert(!physical.contains("NestedLoop"),
-        s"rewritten plan still nested-loops:\n$physical")
-      // multiplicity-exact parity with the un-rewritten join
-      assert(rows(naive) === baseline)
-    }
+    val optimized = naive.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("__graft_range_bkt"),
+      s"rewrite did not fire:\n$optimized")
+    val physical = naive.queryExecution.executedPlan.toString
+    assert(!physical.contains("NestedLoop"),
+      s"rewritten plan still nested-loops:\n$physical")
+    // multiplicity-exact parity with the un-rewritten join
+    assert(rows(naive) === baseline)
   }
 
   test("inclusive bounds and flipped sides still rewrite correctly") {
@@ -60,13 +55,11 @@ class RangeJoinRuleSpec extends SparkSuite {
       col("a.k") === col("b.k") &&
         col("a.tu") - W <= col("b.btu") && col("a.tu") >= col("b.btu"))
       .select(col("a.event_id"), col("b.btu"))
-    val baseline = rows(q)
+    val baseline = naiveRows(q)
     assert(baseline.nonEmpty)
-    withRule {
-      assert(q.queryExecution.optimizedPlan.toString
-        .contains("__graft_range_bkt"))
-      assert(rows(q) === baseline)
-    }
+    assert(q.queryExecution.optimizedPlan.toString
+      .contains("__graft_range_bkt"))
+    assert(rows(q) === baseline)
   }
 
   test("out-of-scope shapes are untouched: full outer, no range bounds") {
@@ -76,15 +69,13 @@ class RangeJoinRuleSpec extends SparkSuite {
         col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"),
       "full")
     def equiOnly = probes.as("a").join(build.as("b"), col("b.k") === col("a.k"))
-    val fullBaseline = rows(full)
-    withRule {
-      assert(!full.queryExecution.optimizedPlan.toString
-        .contains("__graft_range"), "full outer join must not rewrite")
-      assert(!equiOnly.queryExecution.optimizedPlan.toString
-        .contains("__graft_range"), "equi-only join must not rewrite")
-      // full outer results stay correct with the rule installed
-      assert(rows(full) === fullBaseline)
-    }
+    val fullBaseline = naiveRows(full)
+    assert(!full.queryExecution.optimizedPlan.toString
+      .contains("__graft_range"), "full outer join must not rewrite")
+    assert(!equiOnly.queryExecution.optimizedPlan.toString
+      .contains("__graft_range"), "equi-only join must not rewrite")
+    // full outer results stay correct with the rule installed
+    assert(rows(full) === fullBaseline)
   }
 
   /** Probes with keys the build side never has → guaranteed unmatched
@@ -103,20 +94,18 @@ class RangeJoinRuleSpec extends SparkSuite {
         col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"),
       "left")
       .select(col("a.event_id"), col("b.btu"))
-    val baseline = rows(q)
+    val baseline = naiveRows(q)
     assert(baseline.exists(_.contains("null")),
       "geometry must leave some probes unmatched")
     assert(baseline.size > baseline.count(_.contains("null")),
       "geometry must match some probes")
-    withRule {
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("__graft_range_rid"),
-        s"probe-preserved outer rewrite did not fire:\n$optimized")
-      assert(!q.queryExecution.executedPlan.toString.contains("NestedLoop"))
-      // multiplicity-exact: every match once, every unmatched probe ONE
-      // null row (not one per bucket copy)
-      assert(rows(q) === baseline)
-    }
+    val optimized = q.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("__graft_range_rid"),
+      s"probe-preserved outer rewrite did not fire:\n$optimized")
+    assert(!q.queryExecution.executedPlan.toString.contains("NestedLoop"))
+    // multiplicity-exact: every match once, every unmatched probe ONE
+    // null row (not one per bucket copy)
+    assert(rows(q) === baseline)
   }
 
   test("right outer, probe preserved: mirrored rewrite, same result") {
@@ -126,13 +115,11 @@ class RangeJoinRuleSpec extends SparkSuite {
         col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"),
       "right")
       .select(col("a.event_id"), col("b.btu"))
-    val baseline = rows(q)
+    val baseline = naiveRows(q)
     assert(baseline.exists(_.contains("null")))
-    withRule {
-      assert(q.queryExecution.optimizedPlan.toString
-        .contains("__graft_range_rid"))
-      assert(rows(q) === baseline)
-    }
+    assert(q.queryExecution.optimizedPlan.toString
+      .contains("__graft_range_rid"))
+    assert(rows(q) === baseline)
   }
 
   test("left outer, build preserved: direct rewrite (no dedup machinery)") {
@@ -144,16 +131,14 @@ class RangeJoinRuleSpec extends SparkSuite {
         col("b.btu") >= col("a.tu") - W && col("b.btu") < col("a.tu"),
       "left")
       .select(col("b.k"), col("b.btu"), col("a.event_id"))
-    val baseline = rows(q)
+    val baseline = naiveRows(q)
     assert(baseline.exists(_.contains("null")),
       "geometry must leave some build rows unmatched")
-    withRule {
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("__graft_range_bkt"), "must rewrite")
-      assert(!optimized.contains("__graft_range_rid"),
-        "build-preserved outer must not pay the row-id window")
-      assert(rows(q) === baseline)
-    }
+    val optimized = q.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("__graft_range_bkt"), "must rewrite")
+    assert(!optimized.contains("__graft_range_rid"),
+      "build-preserved outer must not pay the row-id window")
+    assert(rows(q) === baseline)
   }
 
   test("randomized parity: inner/left/right across random geometries") {
@@ -176,19 +161,17 @@ class RangeJoinRuleSpec extends SparkSuite {
           col("b.k") === col("a.k") &&
             col("b.btu") >= col("a.tu") - w && col("b.btu") < col("a.tu"), jt)
           .select(col("a.event_id"), col("a.tu"), col("b.btu"))
-        val baseline = rows(q)
-        withRule {
-          assert(q.queryExecution.optimizedPlan.toString
-            .contains("__graft_range"), s"trial $trial $jt: did not rewrite")
-          assert(rows(q) === baseline, s"trial $trial $jt W=$w diverged")
-        }
+        val baseline = naiveRows(q)
+        assert(q.queryExecution.optimizedPlan.toString
+          .contains("__graft_range"), s"trial $trial $jt: did not rewrite")
+        assert(rows(q) === baseline, s"trial $trial $jt W=$w diverged")
       }
     }
   }
 
   test("already-bucketized joins are left alone (no double fan-out)") {
-    // the hand-bucketized recentCountBucketed shape: bucket keys derived
-    // from the same time attributes, range conjuncts folded back into the
+    // a hand-bucketized range join: bucket keys derived from the same
+    // time attributes, range conjuncts folded back into the
     // join condition by predicate pushdown. repartition() keeps the local
     // test frames from constant-folding the bucket Project into the
     // LocalRelation (file-backed frames, as in the real query, keep it)
@@ -197,13 +180,11 @@ class RangeJoinRuleSpec extends SparkSuite {
       .join(build.repartition(2).withColumn("bkt", expr(s"btu div $W")), Seq("k", "bkt"))
       .filter(col("btu") >= col("tu") - W && col("btu") < col("tu"))
       .select(col("event_id"), col("btu"))
-    val baseline = rows(q)
+    val baseline = naiveRows(q)
     assert(baseline.nonEmpty)
-    withRule {
-      assert(!q.queryExecution.optimizedPlan.toString
-        .contains("__graft_range"),
-        "rule must not re-bucketize a hand-bucketized join")
-      assert(rows(q) === baseline)
-    }
+    assert(!q.queryExecution.optimizedPlan.toString
+      .contains("__graft_range"),
+      "rule must not re-bucketize a hand-bucketized join")
+    assert(rows(q) === baseline)
   }
 }

@@ -5,12 +5,14 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** The one session recipe: its function install replaces nothing, its
-  * shared checkpoint dir keeps memo frames alive across [[Session.releaseStaged]],
-  * no other main builds a session of its own, and no library code outside
-  * [[Materialize]] stages a frame by hand.
+/** The one session recipe: it installs graft's optimizer rules once, its
+  * function install replaces nothing, its shared checkpoint dir keeps memo
+  * frames alive across [[Session.releaseStaged]], no other main builds a
+  * session of its own, and no library code outside [[Materialize]] stages
+  * a frame by hand.
   */
 class SessionSpec extends SparkSuite {
 
@@ -35,6 +37,31 @@ class SessionSpec extends SparkSuite {
       assert(builder.get eq before._2.get, s"$n: builder replaced")
       assert(info.get eq before._3.get, s"$n: registration replaced")
     }
+  }
+
+  test("Session.local installs graft's optimizer rules once") {
+    // a tiny naive range join: the range rule buckets it in any session
+    // Session.local returns, the first call's and a repeated call's
+    def assertBucketed(s: SparkSession): Unit = {
+      import s.implicits._
+      val p = (0L until 100L).map(i => (i % 10, i * 7)).toDF("k", "tu")
+      val b = (0L until 300L).map(i => (i % 10, i)).toDF("k", "btu")
+      val plan = p.join(b, p("k") === b("k") &&
+          b("btu") >= p("tu") - 10L && b("btu") < p("tu"))
+        .queryExecution.optimizedPlan.toString
+      assert(plan.contains("__graft_range"), s"not bucketed:\n$plan")
+    }
+    assertBucketed(Session.local(workers = SparkSuite.Workers))
+    val second = Session.local(workers = SparkSuite.Workers)
+    assertBucketed(second)
+    // Spark runs the operator-optimization batch twice (before and after
+    // inferring filters); installed once means once in each
+    val batches = second.sessionState.optimizer.batches.map(_.rules.map(_.ruleName))
+    Seq(plans.RewriteRangeJoin, functions.RewriteDotProduct).foreach { r =>
+      val perBatch = batches.map(_.count(_ == r.ruleName)).filter(_ > 0)
+      assert(perBatch.nonEmpty && perBatch.forall(_ == 1), s"${r.ruleName}: $perBatch")
+    }
+    assert(!batches.flatten.exists(_.endsWith("RewriteOverlapJoin")))
   }
 
   test("a memo-backed query survives releaseStaged under the shared checkpoint dir") {

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM per `sbt test` fork). */
@@ -15,4 +17,17 @@ object SparkSuite {
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
   def smokeDir: String = SparkSuite.smokeDir
+
+  /** Collect `df` planned without `rule`, asserting its optimized plan
+    * holds no `mark` of a rewrite: the rule-free baseline a rewrite is
+    * compared with. The shared session runs graft's optimizer rules, so a
+    * baseline planned unguarded would compare a rule with itself. */
+  def ruleFree(rule: Rule[LogicalPlan], mark: String = "__graft_")(
+      df: => DataFrame): Array[Row] =
+    Session.withoutRule(spark, rule) {
+      val d = df
+      val plan = d.queryExecution.optimizedPlan.toString
+      assert(!plan.contains(mark), s"${rule.ruleName} rewrote the baseline:\n$plan")
+      d.collect()
+    }
 }
